@@ -1,6 +1,6 @@
 """Text-analysis functions (Tier C building blocks).
 
-All pure Column expressions — they compile into whole-stage codegen and
+JVM-side expressions only — they compile into whole-stage codegen and
 never leave the JVM. Deterministic by construction (hash-derived, no RNG),
 so results are stable across runs, executors, and retries — the property
 the reference's exactly-once contract demands of any derived column.
@@ -12,35 +12,37 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-# Column | str dispatch (round 12, same pattern as functions/vectors.py):
-# a str argument is a Spark-SQL expression fragment and the WHOLE helper
-# expression is built as ONE F.expr parse instead of one py4j round trip
-# per operator (~0.3 ms each on the bench box; a 16-member minhash
-# signature costs ~240 gateway calls through the Column API).  Both forms
-# yield the identical Catalyst tree — A/B pinned in
-# tests/test_functions.py::test_text_sql_forms_match_column_forms.
-#
-# Conf dependency (ADVICE r12 #4): the SQL forms write regexes as '\\s+'
-# inside single-quoted SQL literals, which lexes to the same \s+ pattern as
-# the Column forms' r"\s+" only under the DEFAULT
-# spark.sql.parser.escapedStringLiterals=false.  session.get_spark pins
-# that default explicitly; a session built elsewhere with the conf flipped
-# would make the SQL twins emit the literal backslash-backslash-s and
-# silently drift the dedup keys.
+# Single-parse contract (as in functions/vectors.py): every helper takes
+# Spark-SQL expression fragments and builds its whole tree as ONE F.expr
+# parse. Regexes are written '\\s+' in SQL literals, which lexes to \s+ only
+# under spark.sql.parser.escapedStringLiterals=false (session.get_spark pins
+# that default).
 
 
 def normalize_text_sql(c: str) -> str:
-    """Spark-SQL form of :func:`normalize_text` (same tree)."""
+    """Lowercase, collapse whitespace, trim — the canonical dedup key."""
     return f"lower(trim(regexp_replace({c}, '\\\\s+', ' ')))"
 
 
+def normalize_text(c: str) -> Column:
+    return F.expr(normalize_text_sql(c))
+
+
 def words_sql(c: str) -> str:
-    """Spark-SQL form of :func:`words` (same tree)."""
+    """Whitespace tokenization of normalized text."""
     return f"split({normalize_text_sql(c)}, '\\\\s+')"
 
 
+def words(c: str) -> Column:
+    return F.expr(words_sql(c))
+
+
 def shingles_sql(words_sql_frag: str, n: int = 3) -> str:
-    """Spark-SQL form of :func:`shingles` (same tree)."""
+    """Distinct word n-grams (array<string>) — MinHash/Jaccard input.
+
+    slice+array_join per position, not n element_at lookups in the lambda:
+    the element_at tree evaluates interpreted (~7x slower measured);
+    slice+join stays vectorized. Short docs (< n words) yield no grams."""
     w = words_sql_frag
     positions = (
         f"CASE WHEN size({w}) >= {n} THEN sequence(1, size({w}) - {n - 1})"
@@ -52,79 +54,30 @@ def shingles_sql(words_sql_frag: str, n: int = 3) -> str:
     )
 
 
-def normalize_text(c: Column | str) -> Column:
-    """Lowercase, collapse whitespace, trim — the canonical dedup key."""
-    if isinstance(c, str):
-        return F.expr(normalize_text_sql(c))
-    return F.lower(F.trim(F.regexp_replace(c, r"\s+", " ")))
-
-
-def words(c: Column | str) -> Column:
-    """Whitespace tokenization of normalized text."""
-    if isinstance(c, str):
-        return F.expr(words_sql(c))
-    return F.split(normalize_text(c), r"\s+")
-
-
-def shingles(words_col: Column | str, n: int = 3) -> Column:
-    """Distinct word n-grams (array<string>) — MinHash/Jaccard input.
-
-    slice+array_join per position, not n element_at lookups in the lambda:
-    the element_at tree evaluates interpreted (~7x slower measured);
-    slice+join stays vectorized. Short docs (< n words) yield no grams."""
-    if isinstance(words_col, str):
-        return F.expr(shingles_sql(words_col, n))
-    positions = F.when(
-        F.size(words_col) >= n,
-        F.sequence(F.lit(1), F.size(words_col) - (n - 1)),
-    ).otherwise(F.array().cast("array<int>"))
-    return F.array_distinct(
-        F.transform(positions, lambda i: F.array_join(F.slice(words_col, i, n), " "))
-    )
-
-
-def _salted_xxhash64(i: int):
-    """Single-ARITY lambda factory for ``transform``.  The obvious loop
-    closure ``lambda s, i=i: F.xxhash64(F.lit(i), s)`` is a silent trap:
-    PySpark sniffs the callable's arity, a Python default argument still
-    counts toward it, and a two-parameter callable selects ``transform``'s
-    index-aware form ``(x, idx) -> ...`` — so ``i`` was bound to the
-    ELEMENT INDEX, not the loop literal, collapsing all ``num_hashes``
-    members into the same ``xxhash64(position, s)`` value (caught in round
-    10 by the new DuckDB xxhash64 oracle; the rows-only check never could:
-    the degenerate family is still deterministic)."""
-    return lambda s: F.xxhash64(F.lit(i), s)
+def shingles(words_sql_frag: str, n: int = 3) -> Column:
+    return F.expr(shingles_sql(words_sql_frag, n))
 
 
 def minhash_signature_sqls(
     shingles_sql_frag: str, num_hashes: int = 16
 ) -> list[str]:
-    """Spark-SQL forms of the :func:`minhash_signature` members (same
-    trees; the salt literal is the INT ``i`` in both forms)."""
+    """MinHash signature: min over shingles of hash_i(shingle) for each of
+    ``num_hashes`` deterministic hash-family members (xxhash64 salted by
+    the INT literal ``i``).
+
+    xxhash64 is JVM-native and ~10x cheaper than md5 while keeping the
+    collision behavior MinHash needs."""
     return [
         f"array_min(transform({shingles_sql_frag}, s -> xxhash64({i}, s)))"
         for i in range(num_hashes)
     ]
 
 
-def minhash_signature(
-    shingles_col: Column | str, num_hashes: int = 16
-) -> list[Column]:
-    """MinHash signature: min over shingles of hash_i(shingle) for each of
-    ``num_hashes`` deterministic hash-family members (xxhash64 salted by i).
-
-    xxhash64 is JVM-native and ~10x cheaper than md5 while keeping the
-    collision behavior MinHash needs."""
-    if isinstance(shingles_col, str):
-        return [
-            F.expr(s).alias(f"mh{i}")
-            for i, s in enumerate(minhash_signature_sqls(shingles_col, num_hashes))
-        ]
+def minhash_signature(shingles_sql_frag: str, num_hashes: int = 16) -> list[Column]:
+    """The :func:`minhash_signature_sqls` members as ``mh0..mh{n-1}``."""
     return [
-        F.array_min(
-            F.transform(shingles_col, _salted_xxhash64(i))
-        ).alias(f"mh{i}")
-        for i in range(num_hashes)
+        F.expr(s).alias(f"mh{i}")
+        for i, s in enumerate(minhash_signature_sqls(shingles_sql_frag, num_hashes))
     ]
 
 
@@ -210,7 +163,7 @@ def simhash_df(df, id_col: str, words_col: Column, bits: int = 64):
     """Corpus-scale SimHash: same fingerprint as :func:`simhash`, computed
     as explode -> hash-aggregate instead of a higher-order-function fold.
 
-    The Column form materializes a 64-element vote array per TOKEN (a
+    The HOF form materializes a 64-element vote array per TOKEN (a
     64-``when`` array zipped into the accumulator) — measured ~6x slower
     over the sf0.1 corpus than this form, where each token becomes a row,
     the 64 per-bit one-counts are plain SUM aggregates with map-side
@@ -250,84 +203,3 @@ def simhash_df(df, id_col: str, words_col: Column, bits: int = 64):
 def hamming64(a: Column, b: Column) -> Column:
     """Hamming distance between two 64-bit fingerprints (bit_count of XOR)."""
     return F.bit_count(a.bitwiseXOR(b))
-
-
-def token_count(c: Column) -> Column:
-    """Whitespace token count of normalized text."""
-    return F.size(words(c))
-
-
-def bpe_ish_token_count(c: Column) -> Column:
-    """BPE-flavored token estimate: word-boundary pieces + punctuation +
-    digit runs counted separately (a deterministic stand-in for a real
-    tokenizer's token count)."""
-    pieces = F.split(
-        F.regexp_replace(normalize_text(c), r"([^\w\s]|\d+)", " $1 "), r"\s+"
-    )
-    return F.size(F.filter(pieces, lambda p: p != ""))
-
-
-# Tiny per-language stopword anchors for the n-gram language heuristic.
-LANG_MARKERS: dict[str, list[str]] = {
-    "en": [" the ", " and ", " of "],
-    "de": [" der ", " und ", " die "],
-    "fr": [" le ", " et ", " les "],
-    "es": [" el ", " y ", " de la "],
-}
-
-
-def _occurrences(haystack: Column, needle: str) -> Column:
-    """Non-overlapping occurrence count via length arithmetic (JVM-side)."""
-    return (
-        (F.length(haystack) - F.length(F.replace(haystack, F.lit(needle), F.lit(""))))
-        / len(needle)
-    ).cast("int")
-
-
-def lang_id_scores(c: Column) -> Column:
-    """map<lang,int>: marker-hit counts over the padded lowercase text."""
-    padded = F.concat(F.lit(" "), normalize_text(c), F.lit(" "))
-    return F.map_from_arrays(
-        F.array(*[F.lit(lang) for lang in LANG_MARKERS]),
-        F.array(
-            *[
-                sum((_occurrences(padded, m) for m in markers), start=F.lit(0))
-                for markers in LANG_MARKERS.values()
-            ]
-        ),
-    )
-
-
-def quality_score(c: Column) -> Column:
-    """Heuristic document quality in [0,1]: length band, punctuation ratio,
-    stopword presence — the usual pretraining-corpus filters."""
-    n = F.length(c)
-    n_punct = n - F.length(F.regexp_replace(c, r"[^\w\s]", ""))
-    punct_ratio = n_punct / F.greatest(n, F.lit(1))
-    has_stop = (
-        F.size(F.array_intersect(words(c), F.array(F.lit("the"), F.lit("and"), F.lit("of"), F.lit("a"), F.lit("to")))) > 0
-    )
-    len_ok = (n >= 100) & (n <= 20_000)
-    return F.round(
-        (
-            F.when(len_ok, 0.4).otherwise(0.0)
-            + F.when(punct_ratio < 0.2, 0.3).otherwise(0.0)
-            + F.when(has_stop, 0.3).otherwise(0.0)
-        ),
-        2,
-    )
-
-
-def rolling_fingerprint(c: Column, window: int = 8) -> Column:
-    """Winnowing-style document fingerprint: min xxhash64 over each
-    ``window`` of tokens, distinct-collected — a compact set identifying
-    the document under local edits (Schleimer et al., SIGMOD'03)."""
-    w = words(c)
-    positions = F.when(
-        F.size(w) >= window,
-        F.sequence(F.lit(1), F.size(w) - (window - 1)),
-    ).otherwise(F.array().cast("array<int>"))
-    grams = F.transform(
-        positions, lambda i: F.xxhash64(F.array_join(F.slice(w, i, window), " "))
-    )
-    return F.array_distinct(grams)

@@ -30,73 +30,44 @@ except Exception:  # pragma: no cover - defensive: never block imports
     pass
 
 
-# ---------------------------------------------------------------------------
-# Column | str dispatch (round 12).  Every public constructor below accepts
-# either a Column or a Spark-SQL expression STRING (typically a column name).
-# A str argument routes through the *_sql builders and ONE F.expr call; the
-# Column path builds the same tree through the HOF API.  Both yield the
-# IDENTICAL Catalyst expression (same functions, literals and lambda
-# structure — A/B pinned in tests/test_functions.py), so values never
-# change.  Why it exists: each Column/HOF constructor pays one py4j round
-# trip per operator (~0.3 ms on the bench box), so ONE dot() costs ~9-23 ms
-# of driver time before any job runs, and the ANN/vector builders construct
-# dozens per TIMED bench run — profiled at ~2.4 s/run of pure plan
-# construction in ext_ann_recall.  The SQL string parses in the JVM in ~1 ms.
-# ---------------------------------------------------------------------------
+# Single-parse contract: every helper takes Spark-SQL expression fragments
+# (typically column names) and builds its whole tree as ONE string, so a
+# constructor costs one F.expr parse instead of one py4j call per operator.
 
 
 def dot_sql(a: str, b: str) -> str:
-    """Spark-SQL form of :func:`dot` — same zip_with/aggregate structure."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D,"
         " (acc, x) -> acc + x)"
     )
 
 
+def dot(a: str, b: str) -> Column:
+    return F.expr(dot_sql(a, b))
+
+
 def l2_norm_sql(v: str) -> str:
     return f"sqrt({dot_sql(v, v)})"
+
+
+def l2_norm(v: str) -> Column:
+    return F.expr(l2_norm_sql(v))
 
 
 def cosine_sim_sql(a: str, b: str) -> str:
     return f"({dot_sql(a, b)} / ({l2_norm_sql(a)} * {l2_norm_sql(b)}))"
 
 
-def _as_expr(x: Column | str) -> Column:
-    """MIXED str/Column two-arg calls (ADVICE r12 #3): in this module a str
-    argument means a SQL *fragment* (the single-parse contract), but the
-    HOF fallback path would hand it to functions like ``F.zip_with`` where
-    a bare str means a column NAME — so ``dot("slice(v,1,8)", col)``
-    silently misbinds instead of parsing.  Wrap leftover str args in
-    ``F.expr`` so the fragment contract holds for every arity."""
-    return F.expr(x) if isinstance(x, str) else x
+def cosine_sim(a: str, b: str) -> Column:
+    return F.expr(cosine_sim_sql(a, b))
 
 
-def as_double(v: Column | str) -> Column:
-    if isinstance(v, str):
-        return F.expr(f"transform({v}, x -> cast(x as double))")
-    return F.transform(v, lambda x: x.cast("double"))
+def as_double_sql(v: str) -> str:
+    return f"transform({v}, x -> cast(x as double))"
 
 
-def dot(a: Column | str, b: Column | str) -> Column:
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(dot_sql(a, b))
-    a, b = _as_expr(a), _as_expr(b)
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-
-
-def l2_norm(v: Column | str) -> Column:
-    if isinstance(v, str):
-        return F.expr(l2_norm_sql(v))
-    return F.sqrt(dot(v, v))
-
-
-def cosine_sim(a: Column | str, b: Column | str) -> Column:
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(cosine_sim_sql(a, b))
-    a, b = _as_expr(a), _as_expr(b)
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
+def as_double(v: str) -> Column:
+    return F.expr(as_double_sql(v))
 
 
 def _hash_coef(salt: str, idx: int) -> float:
@@ -130,14 +101,6 @@ def _planes_sql(salts: tuple, dim: int) -> str:
 
 
 def srp_bucket_sql(v: str, num_planes: int = 8, dim: int = 64) -> str:
-    """Spark-SQL form of :func:`srp_bucket` (same tree, one expr parse)."""
-    planes = _planes_sql(tuple(f"srp{p}" for p in range(num_planes)), dim)
-    pv = f"CASE WHEN size({v}) >= {dim} THEN p ELSE slice(p, 1, size({v})) END"
-    bit = f"CASE WHEN {dot_sql(v, pv)} >= 0 THEN '1' ELSE '0' END"
-    return f"array_join(transform({planes}, p -> {bit}), '')"
-
-
-def srp_bucket(v: Column | str, num_planes: int = 8, dim: int = 64) -> Column:
     """Sign-random-projection LSH bucket: the sign pattern of ``v`` against
     ``num_planes`` deterministic hyperplanes. Vectors with high cosine
     similarity collide with high probability. ``dim`` must be >= the vector
@@ -145,28 +108,30 @@ def srp_bucket(v: Column | str, num_planes: int = 8, dim: int = 64) -> Column:
     null-pad a length mismatch, poisoning the sum). The plane loop is a
     ``transform`` over one nested literal — constant-size expression tree
     regardless of plane count."""
-    if isinstance(v, str):
-        return F.expr(srp_bucket_sql(v, num_planes, dim))
-    planes = F.expr(_planes_sql(tuple(f"srp{p}" for p in range(num_planes)), dim))
+    planes = _planes_sql(tuple(f"srp{p}" for p in range(num_planes)), dim)
+    # Skip the defensive slice when the vector already spans the full plane
+    # (the common case): slice(p, 1, dim) == p there, and the per-plane
+    # 64-double array copy it avoids is ~10% of the whole bucket projection
+    # at corpus scale. Same elements, same left-to-right sum order.
+    pv = f"CASE WHEN size({v}) >= {dim} THEN p ELSE slice(p, 1, size({v})) END"
+    bit = f"CASE WHEN {dot_sql(v, pv)} >= 0 THEN '1' ELSE '0' END"
+    return f"array_join(transform({planes}, p -> {bit}), '')"
 
-    def bit(p):
-        # Skip the defensive slice when the vector already spans the full
-        # plane (the common case): slice(p, 1, dim) == p there, and the
-        # per-plane 64-double array copy it avoids is ~10% of the whole
-        # bucket projection at corpus scale. Result is bit-identical —
-        # same elements, same left-to-right sum order.
-        pv = F.when(F.size(v) >= dim, p).otherwise(
-            F.slice(p, F.lit(1), F.size(v))
-        )
-        return F.when(dot(v, pv) >= 0, "1").otherwise("0")
 
-    return F.array_join(F.transform(planes, bit), "")
+def srp_bucket(v: str, num_planes: int = 8, dim: int = 64) -> Column:
+    return F.expr(srp_bucket_sql(v, num_planes, dim))
 
 
 def srp_bucket_tables_sql(
     v: str, num_tables: int = 4, num_planes: int = 5, dim: int = 64
 ) -> str:
-    """Spark-SQL form of :func:`srp_bucket_tables` (same tree)."""
+    """Multi-TABLE SRP-LSH: ``num_tables`` independent bucket ids per
+    vector (array<string> "t:bits"). Union-of-tables candidate generation
+    is the standard LSH recall lever: recall rises with the number of
+    tables and with FEWER planes per table (coarser buckets — higher
+    collision probability, more candidates per bucket); cost is the probed
+    corpus fraction. The defaults (4 tables x 5 planes = 32 buckets each)
+    probe ~4/32 of the corpus."""
     tables = (
         "array("
         + ",".join(
@@ -188,47 +153,9 @@ def srp_bucket_tables_sql(
 
 
 def srp_bucket_tables(
-    v: Column | str, num_tables: int = 4, num_planes: int = 5, dim: int = 64
+    v: str, num_tables: int = 4, num_planes: int = 5, dim: int = 64
 ) -> Column:
-    """Multi-TABLE SRP-LSH: ``num_tables`` independent bucket ids per
-    vector (array<string> "t:bits"). Union-of-tables candidate generation
-    is the standard LSH recall lever: recall rises with the number of
-    tables and with FEWER planes per table (coarser buckets — higher
-    collision probability, more candidates per bucket); cost is the probed
-    corpus fraction. The defaults (4 tables x 5 planes = 32 buckets each)
-    probe ~4/32 of the corpus."""
-    if isinstance(v, str):
-        return F.expr(srp_bucket_tables_sql(v, num_tables, num_planes, dim))
-    tables = F.expr(
-        "array("
-        + ",".join(
-            _planes_sql(
-                tuple(f"srp{t * num_planes + p}" for p in range(num_planes)), dim
-            )
-            for t in range(num_tables)
-        )
-        + ")"
-    )
-    return F.transform(
-        tables,
-        lambda tp, ti: F.concat_ws(
-            ":",
-            ti.cast("string"),
-            F.array_join(
-                F.transform(
-                    tp,
-                    lambda p: F.when(
-                        dot(v, F.slice(p, F.lit(1), F.size(v))) >= 0, "1"
-                    ).otherwise("0"),
-                ),
-                "",
-            ),
-        ),
-    )
-
-
-def _centroids(num_centroids: int, dim: int) -> Column:
-    return F.expr(_planes_sql(tuple(f"ivf{c}" for c in range(num_centroids)), dim))
+    return F.expr(srp_bucket_tables_sql(v, num_tables, num_planes, dim))
 
 
 def _ivf_scores_sql(v: str, num_centroids: int, dim: int) -> str:
@@ -240,7 +167,11 @@ def _ivf_scores_sql(v: str, num_centroids: int, dim: int) -> str:
 def ivf_centroid_topk_sql(
     v: str, probes: int = 4, num_centroids: int = 16, dim: int = 64
 ) -> str:
-    """Spark-SQL form of :func:`ivf_centroid_topk` (same tree)."""
+    """Multi-PROBE IVF: the ``probes`` closest pseudo-centroids for a query
+    vector (array<int>), by dot-product score. Probing P cells raises the
+    candidate fraction to P/num_centroids — the IVF nprobe knob (FAISS
+    semantics): recall scales with the probed fraction, cost stays one
+    broadcast join on cell id."""
     cents = _planes_sql(tuple(f"ivf{c}" for c in range(num_centroids)), dim)
     scored = (
         f"transform({cents}, (p, i) -> struct("
@@ -252,24 +183,9 @@ def ivf_centroid_topk_sql(
 
 
 def ivf_centroid_topk(
-    v: Column | str, probes: int = 4, num_centroids: int = 16, dim: int = 64
+    v: str, probes: int = 4, num_centroids: int = 16, dim: int = 64
 ) -> Column:
-    """Multi-PROBE IVF: the ``probes`` closest pseudo-centroids for a query
-    vector (array<int>), by dot-product score. Probing P cells raises the
-    candidate fraction to P/num_centroids — the IVF nprobe knob (FAISS
-    semantics): recall scales with the probed fraction, cost stays one
-    broadcast join on cell id."""
-    if isinstance(v, str):
-        return F.expr(ivf_centroid_topk_sql(v, probes, num_centroids, dim))
-    scored = F.transform(
-        _centroids(num_centroids, dim),
-        lambda p, i: F.struct(
-            dot(v, F.slice(p, F.lit(1), F.size(v))).alias("s"),
-            i.cast("int").alias("c"),
-        ),
-    )
-    top = F.slice(F.sort_array(scored, asc=False), 1, probes)
-    return F.transform(top, lambda x: x["c"])
+    return F.expr(ivf_centroid_topk_sql(v, probes, num_centroids, dim))
 
 
 def _pq_centroids_sql(sub: int, k: int, sub_dim: int) -> str:
@@ -286,7 +202,16 @@ def _pq_sq_norm(sub: int, c: int, sub_dim: int) -> float:
 
 
 def pq_codes_sql(v: str, m: int = 8, k: int = 16, dim: int = 64) -> str:
-    """Spark-SQL form of :func:`pq_codes` (same tree)."""
+    """Product-quantization encode: split ``v`` into ``m`` subvectors of
+    ``dim/m`` dims and assign each to its nearest (L2) of ``k``
+    deterministic pseudo-centroids. Returns ``array<int>`` of ``m`` codes —
+    the 100 TB compression step: downstream ANN stages shuffle/score these
+    ``m``-byte codes instead of the full vector (64 doubles -> 8 codes is a
+    64x payload cut). argmin ||x-c||^2 == argmax (x.c - ||c||^2/2); the
+    ``||c||^2/2`` terms are plan-time Python constants, so the per-row cost
+    is m*k short dot products over literal arrays (no RNG, no training —
+    the same no-training tradeoff as ``ivf_centroid_id``, recall measured
+    by ``ext_ann_recall``)."""
     sub_dim = dim // m
     parts = []
     for s in range(m):
@@ -307,34 +232,8 @@ def pq_codes_sql(v: str, m: int = 8, k: int = 16, dim: int = 64) -> str:
     return "array(" + ",".join(parts) + ")"
 
 
-def pq_codes(v: Column | str, m: int = 8, k: int = 16, dim: int = 64) -> Column:
-    """Product-quantization encode: split ``v`` into ``m`` subvectors of
-    ``dim/m`` dims and assign each to its nearest (L2) of ``k``
-    deterministic pseudo-centroids. Returns ``array<int>`` of ``m`` codes —
-    the 100 TB compression step: downstream ANN stages shuffle/score these
-    ``m``-byte codes instead of the full vector (64 doubles -> 8 codes is a
-    64x payload cut). argmin ||x-c||^2 == argmax (x.c - ||c||^2/2); the
-    ``||c||^2/2`` terms are plan-time Python constants, so the per-row cost
-    is m*k short dot products over literal arrays (no RNG, no training —
-    the same no-training tradeoff as ``ivf_centroid_id``, recall measured
-    by ``ext_ann_recall``)."""
-    if isinstance(v, str):
-        return F.expr(pq_codes_sql(v, m, k, dim))
-    sub_dim = dim // m
-    parts = []
-    for s in range(m):
-        cents = F.expr(_pq_centroids_sql(s, k, sub_dim))
-        subv = F.slice(v, s * sub_dim + 1, sub_dim)
-        half_norms = F.expr(
-            "array(" + ",".join(f"{_pq_sq_norm(s, c, sub_dim) / 2.0!r}D" for c in range(k)) + ")"
-        )
-        scores = F.zip_with(
-            F.transform(cents, lambda p: dot(subv, p)),  # noqa: B023
-            half_norms,
-            lambda d, h: d - h,
-        )
-        parts.append((F.array_position(scores, F.array_max(scores)) - 1).cast("int"))
-    return F.array(*parts)
+def pq_codes(v: str, m: int = 8, k: int = 16, dim: int = 64) -> Column:
+    return F.expr(pq_codes_sql(v, m, k, dim))
 
 
 def round_half_up6(a):
@@ -427,7 +326,7 @@ def srp_planes_np(num_planes: int = 8, dim: int = 64):
     array — the same ``_hash_coef`` constants as ``srp_bucket``'s literal
     arrays (plane i is salt ``srp{i}`` in both forms), for the batched
     bucket-assign in the embedding-LSH scale modes. Sign decisions match
-    the Column form exactly: both compute dot(v, plane) and test >= 0,
+    the SQL form exactly: both compute dot(v, plane) and test >= 0,
     and the hash-derived coefficients keep |dot| far from the fp-noise
     floor (pinned by the helper-level A/B in tests/test_plan_audits.py)."""
     import numpy as np
@@ -454,7 +353,7 @@ def ivf_centroids_np(num_centroids: int = 16, dim: int = 64):
 
 def pq_centroids_np(m: int = 8, k: int = 16, dim: int = 64):
     """The PQ codebook family as a numpy ``(m, k, dim/m)`` float64 array —
-    the SAME ``_hash_coef`` constants the Column/DuckDB forms inline as
+    the SAME ``_hash_coef`` constants the Spark-SQL/DuckDB forms inline as
     literals (``_pq_centroids_sql`` / ``duck_pq_codes_sql``), exported for
     the GEMM-per-cell ADC path in ``ext_sim_search_pq`` scale mode. The
     three representations are bit-identical doubles (4-decimal-exact
@@ -476,7 +375,12 @@ def pq_centroids_np(m: int = 8, k: int = 16, dim: int = 64):
 def pq_adc_score_sql(
     qv: str, codes: str, m: int = 8, k: int = 16, dim: int = 64
 ) -> str:
-    """Spark-SQL form of :func:`pq_adc_score` (same tree)."""
+    """Asymmetric-distance (ADC) inner-product score of a QUERY vector
+    against a corpus vector's PQ ``codes``: sum over subspaces of
+    dot(query_subvector, centroid[code]). The query side computes its m x k
+    lookup table once per row from literal centroid arrays; the corpus side
+    contributes only its codes — this is how FAISS IVF-PQ scores candidates
+    without touching the raw corpus vectors."""
     sub_dim = dim // m
     terms = []
     for s in range(m):
@@ -489,27 +393,9 @@ def pq_adc_score_sql(
 
 
 def pq_adc_score(
-    qv: Column | str, codes: Column | str, m: int = 8, k: int = 16, dim: int = 64
+    qv: str, codes: str, m: int = 8, k: int = 16, dim: int = 64
 ) -> Column:
-    """Asymmetric-distance (ADC) inner-product score of a QUERY vector
-    against a corpus vector's PQ ``codes``: sum over subspaces of
-    dot(query_subvector, centroid[code]). The query side computes its m x k
-    lookup table once per row from literal centroid arrays; the corpus side
-    contributes only its codes — this is how FAISS IVF-PQ scores candidates
-    without touching the raw corpus vectors."""
-    if isinstance(qv, str) and isinstance(codes, str):
-        return F.expr(pq_adc_score_sql(qv, codes, m, k, dim))
-    qv, codes = _as_expr(qv), _as_expr(codes)
-    sub_dim = dim // m
-    terms = []
-    for s in range(m):
-        cents = F.expr(_pq_centroids_sql(s, k, sub_dim))
-        subq = F.slice(qv, s * sub_dim + 1, sub_dim)
-        terms.append(dot(subq, F.element_at(cents, F.element_at(codes, s + 1) + 1)))
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
+    return F.expr(pq_adc_score_sql(qv, codes, m, k, dim))
 
 
 # --- DuckDB oracle fragments -------------------------------------------------
@@ -627,14 +513,6 @@ def duck_pq_adc_sql(
 
 
 def ivf_centroid_id_sql(v: str, num_centroids: int = 16, dim: int = 64) -> str:
-    """Spark-SQL form of :func:`ivf_centroid_id` (same tree)."""
-    scores = _ivf_scores_sql(v, num_centroids, dim)
-    return f"cast((array_position({scores}, array_max({scores})) - 1) as int)"
-
-
-def ivf_centroid_id(
-    v: Column | str, num_centroids: int = 16, dim: int = 64
-) -> Column:
     """IVF-style coarse quantization without training: assign each vector
     to the deterministic pseudo-centroid with the highest dot product.
 
@@ -644,10 +522,9 @@ def ivf_centroid_id(
     recall, tuned by probing more cells. Centroid coefficients are literal
     arrays (plan-time constants), so the per-row cost is ``num_centroids``
     dot products."""
-    if isinstance(v, str):
-        return F.expr(ivf_centroid_id_sql(v, num_centroids, dim))
-    scores = F.transform(
-        _centroids(num_centroids, dim),
-        lambda p: dot(v, F.slice(p, F.lit(1), F.size(v))),
-    )
-    return (F.array_position(scores, F.array_max(scores)) - 1).cast("int")
+    scores = _ivf_scores_sql(v, num_centroids, dim)
+    return f"cast((array_position({scores}, array_max({scores})) - 1) as int)"
+
+
+def ivf_centroid_id(v: str, num_centroids: int = 16, dim: int = 64) -> Column:
+    return F.expr(ivf_centroid_id_sql(v, num_centroids, dim))

@@ -18,14 +18,16 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _offset_order(*, desc: bool = False) -> list[Column]:
-    """Total offset order over the simulated binlog: (ts, event_id).
+# Total offset order over the simulated binlog. Analog of
+# BinlogOffset.compareTo (reference
+# flink-connector-mysql-cdc/.../source/offset/BinlogOffset.java:173-255):
+# compare timestamps, then file/pos — here the monotonic event_id.
+_OFFSET_ORDER = ("ts", "event_id")
 
-    Analog of BinlogOffset.compareTo (reference
-    flink-connector-mysql-cdc/.../source/offset/BinlogOffset.java:173-255):
-    compare timestamps, then file/pos — here the monotonic event_id.
-    """
-    cols = [F.col("ts"), F.col("event_id")]
+
+def _offset_order(*, desc: bool = False) -> list[Column]:
+    """:data:`_OFFSET_ORDER` as sort Columns."""
+    cols = [F.col(c) for c in _OFFSET_ORDER]
     return [c.desc() for c in cols] if desc else cols
 
 
@@ -59,7 +61,7 @@ def changelog_normalize(
     # Single-parse form (round 13): this helper fronts a dozen tier-A
     # keys and some builders call it several times per run — the window
     # rank builds as one selectExpr parse instead of ~45 gateway calls.
-    order = "ts DESC, event_id DESC"
+    order = ", ".join(f"{c} DESC" for c in _OFFSET_ORDER)
     if "schema_epoch" in changelog.columns:
         order += ", schema_epoch DESC"
     keys = ", ".join(f"`{k}`" for k in key_cols)

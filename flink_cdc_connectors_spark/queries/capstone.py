@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 
 from flink_cdc_connectors_spark.functions import text as TX
 from flink_cdc_connectors_spark.registry import query
+from flink_cdc_connectors_spark.sources.envelope import op_sql
 from flink_cdc_connectors_spark.sources.loaders import load_table
 
 _N_HASH = 16
@@ -87,9 +88,7 @@ def _duck_capstone_oracle() -> str:
             FROM mx),
     tail AS (
       SELECT e.event_id,
-             CASE WHEN e.event_type = 'signup' THEN 'insert'
-                  WHEN e.event_type = 'error' THEN 'delete'
-                  ELSE 'update' END AS op,
+             {op_sql("e.event_type")} AS op,
              {_STREAM_BASE} + e.event_id % b.k AS doc_key,
              e.event_id % {_SRC_MOD} AS src
       FROM events e, bnd b WHERE e.event_id > b.p),

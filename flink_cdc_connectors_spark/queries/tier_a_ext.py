@@ -42,17 +42,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from flink_cdc_connectors_spark.registry import query
+from flink_cdc_connectors_spark.sources.envelope import op_sql
 from flink_cdc_connectors_spark.sources.loaders import load_table
 
 # Cents conversion used everywhere a float would otherwise ride a string
 # format (engine float->string formatting differs; integer cents do not).
 # floor(x*100 + 0.5) instead of round(): Spark rounds HALF_UP, DuckDB
 # HALF_EVEN — floor(+0.5) is identical in both.
-_CENTS = "CAST(floor(value * 100 + 0.5) AS BIGINT)"
-
-
-def _cents(col: str = "value") -> F.Column:
-    return F.floor(F.col(col) * 100 + F.lit(0.5)).cast("long")
+def _cents_sql(col: str = "value") -> str:
+    return f"CAST(floor({col} * 100 + 0.5) AS BIGINT)"
 
 
 # The database-side log state machine (same contract as
@@ -66,25 +64,19 @@ def _cents(col: str = "value") -> F.Column:
 #   delete          no          (dropped)
 _LOGGED_SQL = f"""
   SELECT event_id, ts, user_id,
-         {_CENTS}                                       AS cents,
-         {_CENTS.replace("value", "prev_value")}        AS prev_cents,
+         {_cents_sql()}                                 AS cents,
+         {_cents_sql("prev_value")}                     AS prev_cents,
          CAST(json_extract_string(props, '$.k') AS BIGINT)      AS k_val,
          CAST(json_extract_string(prev_props, '$.k') AS BIGINT) AS prev_k,
          CASE WHEN app_op = 'delete' THEN 'delete'
               WHEN live THEN 'update' ELSE 'insert' END AS op
   FROM (
     SELECT event_id, ts, user_id, value, props,
-           CASE WHEN event_type = 'signup' THEN 'insert'
-                WHEN event_type = 'error' THEN 'delete'
-                ELSE 'update' END AS app_op,
+           {op_sql()} AS app_op,
            lag(value) OVER w AS prev_value,
            lag(props) OVER w AS prev_props,
-           (lag(CASE WHEN event_type = 'signup' THEN 'insert'
-                     WHEN event_type = 'error' THEN 'delete'
-                     ELSE 'update' END) OVER w IS NOT NULL
-            AND lag(CASE WHEN event_type = 'signup' THEN 'insert'
-                         WHEN event_type = 'error' THEN 'delete'
-                         ELSE 'update' END) OVER w <> 'delete') AS live
+           (lag({op_sql()}) OVER w IS NOT NULL
+            AND lag({op_sql()}) OVER w <> 'delete') AS live
     FROM events
     WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
   )
@@ -108,10 +100,7 @@ def _logged(spark: SparkSession, sf_dir: str) -> DataFrame:
     Window operator exactly as the `.over(w)` chain did; values are
     unchanged (the 160-key oracle sweep covers every consumer).
     """
-    app_op = (
-        "CASE WHEN event_type = 'error' THEN 'delete' "
-        "WHEN event_type = 'signup' THEN 'insert' ELSE 'update' END"
-    )
+    app_op = op_sql()
     over = "OVER (PARTITION BY user_id ORDER BY ts, event_id)"
     staged = load_table(spark, sf_dir, "events").selectExpr(
         "event_id",
@@ -131,8 +120,8 @@ def _logged(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "ts",
         "user_id",
-        f"{_CENTS} AS cents",
-        f"{_CENTS.replace('value', 'prev_value')} AS prev_cents",
+        f"{_cents_sql()} AS cents",
+        f"{_cents_sql('prev_value')} AS prev_cents",
         "CAST(get_json_object(props, '$.k') AS BIGINT) AS k_val",
         "CAST(get_json_object(prev_props, '$.k') AS BIGINT) AS prev_k",
         "CASE WHEN app_op = 'delete' THEN 'delete'"

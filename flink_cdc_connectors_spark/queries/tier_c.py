@@ -395,7 +395,7 @@ def ext_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{n_docs} docs — candidate recall differs from the pinned "
             f"string-shingle family below {_MINHASH_SCALE_DOCS} docs"
         )
-        w = T.words(F.col("text"))
+        w = T.words("text")
         wordsed = corpus.select("doc_id", w.alias("w"))
         pos = F.when(
             F.size("w") >= 3, F.sequence(F.lit(1), F.size("w") - 2)
@@ -411,18 +411,8 @@ def ext_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         hashed = wordsed.select("doc_id", h3.alias("hsh"))
-        # single-arity lambda factory — a `lambda h, i=i:` closure would
-        # bind i to the ELEMENT INDEX via transform's index-aware form
-        # (the arity trap documented at functions/text.py::_salted_xxhash64)
         sh_arr = hashed.select(
-            "doc_id",
-            "hsh",
-            *[
-                F.array_min(
-                    F.transform(F.col("hsh"), T._salted_xxhash64(i))
-                ).alias(f"mh{i}")
-                for i in range(16)
-            ],
+            "doc_id", "hsh", *T.minhash_signature("hsh", 16)
         ).localCheckpoint(eager=True)
     sig = sh_arr
     # LSH: 4 bands of 4 rows; band signature = xxhash64 of the band minhashes

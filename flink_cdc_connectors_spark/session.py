@@ -58,11 +58,10 @@ def get_spark(
             "spark.driver.extraJavaOptions",
             "-XX:ReservedCodeCacheSize=512m",
         )
-        # The single-parse SQL forms in functions/text.py encode regexes as
-        # '\\s+' inside SQL string literals, which equals the Column forms'
-        # r"\s+" only under the DEFAULT escapedStringLiterals=false (ADVICE
-        # r12 #4); pin the default so a global conf flip cannot silently
-        # diverge the dedup keys from their Column twins.
+        # functions/text.py writes its regexes as '\\s+' inside SQL string
+        # literals, which lexes to the regex \s+ only under the DEFAULT
+        # escapedStringLiterals=false; pin it so a global conf flip cannot
+        # silently change the normalized text and the dedup keys.
         .config("spark.sql.parser.escapedStringLiterals", "false")
     )
     spark = builder.getOrCreate()

@@ -36,6 +36,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from flink_cdc_connectors_spark.sources.envelope import op_sql
 from flink_cdc_connectors_spark.sources.offsets import BinlogOffset
 from flink_cdc_connectors_spark.sources.schema_history import SchemaHistory
 
@@ -121,11 +122,7 @@ def _duck_type(dt: T.DataType) -> str:
         return f"DECIMAL({dt.precision},{dt.scale})"
     return "VARCHAR"
 
-# op mapping pinned in sources/envelope.py (EVENT_TYPE_TO_OP)
-_OP_SQL = (
-    "CASE WHEN event_type = 'signup' THEN 'insert' "
-    "WHEN event_type = 'error' THEN 'delete' ELSE 'update' END"
-)
+_OP_SQL = op_sql()
 
 
 @dataclass

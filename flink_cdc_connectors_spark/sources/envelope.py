@@ -38,36 +38,53 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# Names interpolated into the single-parse SQL strings (db/table literals,
-# the value column, payload field names) must be inert under the SQL lexer
-# (ADVICE r12 #2 — shared with sources/formats.py, which imports these).
+# Names interpolated into the single-parse SQL strings must be inert under
+# the SQL lexer (shared with sources/formats.py, which imports these):
+# db/table land inside quoted string literals, the value column is a bare
+# identifier, and payload field names are backtick-quoted inside the
+# from_json DDL literal.
 _SAFE_SQL_NAME = re.compile(r"^[A-Za-z0-9_.$-]+$")
+_SQL_IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
 
 def _safe(name: str, what: str) -> str:
     if not _SAFE_SQL_NAME.match(name):
         raise ValueError(
-            f"{what} {name!r} is interpolated into a SQL string and must "
-            "match [A-Za-z0-9_.$-]+"
+            f"{what} {name!r} is interpolated into a SQL string literal and "
+            "must match [A-Za-z0-9_.$-]+"
         )
     return name
 
 
-def _payload_ddl(payload_schema: T.StructType) -> str:
-    """A struct schema as a DDL fragment for from_json SQL strings —
-    parses to the same StructType object the StructType form passed.
-    Field names are backtick-quoted (and asserted backtick-free) so a
-    name that is a SQL keyword still parses as a name."""
-    for f in payload_schema.fields:
-        if "`" in f.name:
-            raise ValueError(f"payload field {f.name!r} cannot carry a backtick")
-    return (
-        "struct<"
-        + ",".join(
-            f"`{f.name}`:{f.dataType.simpleString()}" for f in payload_schema.fields
+def _safe_ident(name: str, what: str) -> str:
+    if not _SQL_IDENT.match(name):
+        raise ValueError(
+            f"{what} {name!r} is interpolated into SQL as an identifier and "
+            "must match [A-Za-z_][A-Za-z0-9_]*"
         )
-        + ">"
-    )
+    return name
+
+
+def _payload_ddl(dt: T.DataType) -> str:
+    """A payload type as a DDL fragment for from_json SQL strings — parses
+    to the same type object. Every struct field name, at every nesting
+    level, is backtick-quoted so a keyword, dot or dash parses as a name;
+    backticks would close that quoting, and quotes or backslashes would end
+    or escape the SQL string literal the DDL sits in, so they are rejected."""
+    if isinstance(dt, T.StructType):
+        for f in dt.fields:
+            if any(ch in f.name for ch in "`'\\"):
+                raise ValueError(
+                    f"payload field {f.name!r} cannot carry a backtick, "
+                    "quote or backslash"
+                )
+        fields = ",".join(f"`{f.name}`:{_payload_ddl(f.dataType)}" for f in dt.fields)
+        return f"struct<{fields}>"
+    if isinstance(dt, T.ArrayType):
+        return f"array<{_payload_ddl(dt.elementType)}>"
+    if isinstance(dt, T.MapType):
+        return f"map<{_payload_ddl(dt.keyType)},{_payload_ddl(dt.valueType)}>"
+    return dt.simpleString()
 
 # Maps the fixture's event_type to a changelog op. Kept as a plain dict so
 # both the Column expression and oracle SQL are generated from one place.
@@ -205,10 +222,7 @@ def events_to_debezium_json(
     Values and wire bytes unchanged (oracle- and test-pinned).
     """
     db, table = _safe(db, "db"), _safe(table, "table")
-    app_op = (
-        "CASE WHEN event_type = 'error' THEN 'delete' "
-        "WHEN event_type = 'signup' THEN 'insert' ELSE 'update' END"
-    )
+    app_op = op_sql()
     over = "OVER (PARTITION BY user_id ORDER BY ts, event_id)"
     # Materialize lag columns before building the to_json struct (window
     # expressions cannot nest inside generators/struct literals).
@@ -383,7 +397,11 @@ _VARIANT_SAFE_TYPES = (
 
 
 def _variant_safe(payload_schema: T.StructType) -> bool:
-    return all(isinstance(f.dataType, _VARIANT_SAFE_TYPES) for f in payload_schema.fields)
+    # field names become JSON-path segments, where a dot would nest
+    return all(
+        isinstance(f.dataType, _VARIANT_SAFE_TYPES) and _SQL_IDENT.match(f.name)
+        for f in payload_schema.fields
+    )
 
 
 def _variant_envelope(v: Column, payload_schema: T.StructType) -> Column:
@@ -474,10 +492,13 @@ def parse_debezium_json(
         raise ValueError(f"payload fields collide with metadata columns: {sorted(overlap)}")
     if engine == "variant" and not _variant_safe(payload_schema):
         raise ValueError(
-            "engine='variant' supports flat atomic payload schemas only; "
-            "use engine='auto' to fall back to from_json"
+            "engine='variant' supports flat atomic payload schemas with "
+            "identifier field names only; use engine='auto' to fall back to "
+            "from_json"
         )
     use_variant = engine == "variant"
+    value_col = _safe_ident(value_col, "value_col")
+    p = _payload_ddl(payload_schema)
     # ONE full-schema parse materialized as a struct column, shared by
     # every downstream field access (whole-stage codegen evaluates it
     # once per row — the BASELINE round-6 CSE measurement). Deliberately
@@ -507,14 +528,13 @@ def parse_debezium_json(
             _variant_envelope(F.col("__v"), payload_schema).alias("e")
         ).filter(F.col("e.op") != HEARTBEAT_OP)
     else:
-        p = _payload_ddl(payload_schema)
         env_ddl = (
             f"before {p}, after {p},"
             " source struct<db:string,table:string,ts_ms:bigint,"
             "file:string,pos:bigint>, op string, ts_ms bigint"
         )
         parsed = raw.selectExpr(
-            f"from_json({_safe(value_col, 'value_col')}, '{env_ddl}') AS e"
+            f"from_json({value_col}, '{env_ddl}') AS e"
         ).filter(f"e.op <> '{HEARTBEAT_OP}'")
     if mode == "upsert":
         kind_rows = (
@@ -579,7 +599,7 @@ def parse_debezium_json_multi(
     fan-out pattern; in production the changelog is already materialized in
     the log/topic, making this a no-op.
     """
-    value_col = _safe(value_col, "value_col")
+    value_col = _safe_ident(value_col, "value_col")
     routed = raw.selectExpr(
         value_col,
         f"from_json({value_col},"

@@ -48,13 +48,14 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# _safe / _payload_ddl: the interpolation guards for single-parse SQL
-# strings (ADVICE r12 #2) — shared with the Debezium envelope module,
+# _safe / _safe_ident / _payload_ddl: the interpolation guards for
+# single-parse SQL strings — shared with the Debezium envelope module,
 # which round 13 converted to the same single-parse style.
 from flink_cdc_connectors_spark.sources.envelope import (
     EVENT_PAYLOAD_SCHEMA,
     _payload_ddl,
     _safe,
+    _safe_ident,
     op_col,
 )
 
@@ -108,7 +109,7 @@ def parse_changelog_json(
 ) -> DataFrame:
     """changelog-json -> typed rows with ``row_kind`` — one ``from_json``
     projection, schema parameterized per table."""
-    value_col = _safe(value_col, "value_col")
+    value_col = _safe_ident(value_col, "value_col")
     ddl = f"data {_payload_ddl(payload_schema)}, op string"
     parsed = raw.select(
         F.expr(f"from_json({value_col}, '{ddl}')").alias("e")
@@ -151,7 +152,7 @@ def parse_canal_json(
     """Canal JSON -> typed changelog rows with ``row_kind``: INSERT -> +I,
     DELETE -> -D, UPDATE -> the (-U from ``old``, +U from ``data``) pair —
     the same expansion Flink's canal-json format performs."""
-    value_col = _safe(value_col, "value_col")
+    value_col = _safe_ident(value_col, "value_col")
     p = _payload_ddl(payload_schema)
     ddl = (
         f"data array<{p}>, old array<{p}>, type string, database string,"
@@ -248,7 +249,7 @@ def parse_ogg_json(
     """Ogg JSON -> typed changelog rows with ``row_kind``: I -> +I from
     ``after``, D -> -D from ``before``, U -> (-U from ``before``, +U from
     ``after``) — the same expansion Flink's ogg-json format performs."""
-    value_col = _safe(value_col, "value_col")
+    value_col = _safe_ident(value_col, "value_col")
     p = _payload_ddl(payload_schema)
     ddl = (
         "table string, op_type string, op_ts string, current_ts string,"
@@ -280,7 +281,7 @@ def parse_maxwell_json(
     coalesce) — the standard Maxwell reconstruction, with its standard
     caveat that a column changed TO null is indistinguishable from an
     unchanged one (the fixture has no null payloads)."""
-    value_col = _safe(value_col, "value_col")
+    value_col = _safe_ident(value_col, "value_col")
     p = _payload_ddl(payload_schema)
     ddl = (
         "database string, table string, type string, ts bigint, xid bigint,"

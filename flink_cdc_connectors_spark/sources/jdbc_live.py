@@ -124,14 +124,19 @@ def derby_update(spark: SparkSession, url: str):
     back-to-back, and re-opening an embedded connection per statement paid
     connection setup + py4j round trips for nothing.  ``derby_shutdown``
     (shutdown=true) closes every open connection, so the reuse does not
-    block the same-JVM rebuild path."""
+    block the same-JVM rebuild path; the next call reopens the closed
+    connection.  Each statement is closed after its update."""
     jvm = spark._jvm  # noqa: SLF001
     holder: list = []
 
     def run(sql: str) -> int:
-        if not holder:
-            holder.append(jvm.java.sql.DriverManager.getConnection(url))
-        return holder[0].createStatement().executeUpdate(sql)
+        if not holder or holder[0].isClosed():
+            holder[:] = [jvm.java.sql.DriverManager.getConnection(url)]
+        stmt = holder[0].createStatement()
+        try:
+            return stmt.executeUpdate(sql)
+        finally:
+            stmt.close()
 
     return run
 

@@ -35,7 +35,7 @@ from flink_cdc_connectors_spark.functions import text as T
 def with_text_hash(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Append the exact-dedup key: md5 of normalized text (same key as the
     batch `ext_dedup_exact_text`)."""
-    return docs.withColumn("text_hash", F.md5(T.normalize_text(F.col(text_col))))
+    return docs.withColumn("text_hash", F.md5(T.normalize_text(text_col)))
 
 
 def stream_dedup_exact(

@@ -143,7 +143,7 @@ def test_simhash_aggregate_is_partial(spark, sf_dir):
     from flink_cdc_connectors_spark.sources.loaders import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    fp = T.simhash_df(docs, "doc_id", T.words(F.col("text")))
+    fp = T.simhash_df(docs, "doc_id", T.words("text"))
     assert "partial" in explain_str(fp).lower()
     assert not has_single_partition_exchange(fp)
     assert not has_single_partition_exchange(
@@ -834,11 +834,11 @@ def test_srp_batch_sig_matches_hof(spark, sf_dir):
     from flink_cdc_connectors_spark.sources.loaders import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.select("vec_id", V.as_double(F.col("embedding")).alias("v"))
+    base = emb.select("vec_id", V.as_double("embedding").alias("v"))
     for planes in (8, 13):
         jvm = (
             base.select(
-                "vec_id", V.srp_bucket(F.col("v"), num_planes=planes).alias("bucket")
+                "vec_id", V.srp_bucket("v", num_planes=planes).alias("bucket")
             )
             .toPandas()
             .sort_values("vec_id")

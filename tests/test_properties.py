@@ -828,3 +828,64 @@ def test_hybrid_capture_set_invariant_under_add_and_resnapshot(
         spans = sorted((c.lo, c.hi) for c in src.state.chunks)
         for a, b in zip(spans, spans[1:]):
             assert a[1] <= b[0], f"overlapping chunk metadata after {op}"
+
+
+# -- SQL-name guards of the Debezium decoder (sources/envelope.py) -----------
+
+_NAME_CHARS = "ab_.-'\"`\\ 9"
+
+
+@given(
+    name=st.text(alphabet=_NAME_CHARS, min_size=1, max_size=6),
+    value_col=st.one_of(
+        st.just("value"), st.text(alphabet=_NAME_CHARS, min_size=1, max_size=4)
+    ),
+)
+@settings(
+    max_examples=30,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+def test_envelope_field_names_round_trip_or_raise(spark, name, value_col):
+    """Field names with quotes, backslashes, dots, dashes or backticks —
+    top-level and nested — and any value column name either decode
+    through from_json unchanged or raise ValueError; never a parse error
+    or a silently wrong column."""
+    import json
+    import re
+
+    from pyspark.sql import types as PT
+
+    from flink_cdc_connectors_spark.sources.envelope import parse_debezium_json
+
+    schema = PT.StructType(
+        [
+            PT.StructField("user_id", PT.LongType()),
+            PT.StructField(name, PT.StringType()),
+            PT.StructField(
+                "nest", PT.StructType([PT.StructField(name, PT.LongType())])
+            ),
+        ]
+    )
+    after = {"user_id": 1, name: "x", "nest": {name: 7}}
+    record = {
+        "before": None,
+        "after": after,
+        "source": {"db": "d", "table": "t", "ts_ms": 0, "file": "f", "pos": 1},
+        "op": "c",
+        "ts_ms": 0,
+    }
+    raw = spark.createDataFrame(
+        [(json.dumps(record),)],
+        PT.StructType([PT.StructField(value_col, PT.StringType())]),
+    )
+    rejects = any(ch in name for ch in "`'\\") or not re.fullmatch(
+        r"[A-Za-z_][A-Za-z0-9_]*", value_col
+    )
+    if rejects:
+        with pytest.raises(ValueError):
+            parse_debezium_json(raw, value_col=value_col, payload_schema=schema)
+        return
+    row = parse_debezium_json(raw, value_col=value_col, payload_schema=schema).first()
+    assert row["op"] == "insert" and row["user_id"] == 1
+    assert row[name] == "x" and row["nest"][name] == 7
