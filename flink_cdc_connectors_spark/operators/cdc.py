@@ -23,6 +23,8 @@ from pyspark.sql import functions as F
 # flink-connector-mysql-cdc/.../source/offset/BinlogOffset.java:173-255):
 # compare timestamps, then file/pos — here the monotonic event_id.
 _OFFSET_ORDER = ("ts", "event_id")
+# ... and as the descending SQL sort list (latest first).
+_OFFSET_DESC = ", ".join(f"{c} DESC" for c in _OFFSET_ORDER)
 
 
 def _offset_order(*, desc: bool = False) -> list[Column]:
@@ -61,7 +63,7 @@ def changelog_normalize(
     # Single-parse form (round 13): this helper fronts a dozen tier-A
     # keys and some builders call it several times per run — the window
     # rank builds as one selectExpr parse instead of ~45 gateway calls.
-    order = ", ".join(f"{c} DESC" for c in _OFFSET_ORDER)
+    order = _OFFSET_DESC
     if "schema_epoch" in changelog.columns:
         order += ", schema_epoch DESC"
     keys = ", ".join(f"`{k}`" for k in key_cols)

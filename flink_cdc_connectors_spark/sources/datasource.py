@@ -36,6 +36,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from flink_cdc_connectors_spark.operators.cdc import _OFFSET_DESC
 from flink_cdc_connectors_spark.sources.envelope import op_sql
 from flink_cdc_connectors_spark.sources.offsets import BinlogOffset
 from flink_cdc_connectors_spark.sources.schema_history import SchemaHistory
@@ -306,6 +307,7 @@ class CdcBinlogStreamReader(DataSourceStreamReader):
         # plans a stream range below it, so a transiently regressed offset
         # document can never re-emit delivered events.
         self._seen = -1
+        self._last_end: dict | None = None  # latest END document planned
         self.startup_mode = options.get("startupmode", "initial")
         if self.startup_mode not in (
             "initial", "earliest-offset", "latest-offset", "specific-offset", "timestamp"
@@ -564,7 +566,7 @@ class CdcBinlogStreamReader(DataSourceStreamReader):
             if cur is not None:
                 self.max_off = max(self.max_off, int(cur))
         if self.max_per_batch is None:
-            return self._offset_dict("stream", hw, self.max_off, dlv=self._seen)
+            return self._end_offset(hw, self.max_off)
         if self._planned_off is None:
             # guard (a): non-advancing anchor — fresh query: batch 0 plans
             # (startup, startup] (empty tail; the snapshot phase, if any,
@@ -572,9 +574,34 @@ class CdcBinlogStreamReader(DataSourceStreamReader):
             # checkpoint, but it plans no data, and partitions() clamps
             # the cursor forward before the next advance.
             self._planned_off = max(hw, self._seen)
-            return self._offset_dict("stream", hw, self._planned_off, dlv=self._seen)
+            return self._end_offset(hw, self._planned_off)
         self._planned_off = min(self._planned_off + self.max_per_batch, self.max_off)
-        return self._offset_dict("stream", hw, self._planned_off, dlv=self._seen)
+        return self._end_offset(hw, self._planned_off)
+
+    def _end_offset(self, hw: int, off: int) -> dict:
+        """The END document of the next batch. A plan that does not
+        advance returns the previous document UNCHANGED: Spark then sees
+        the end it already holds and runs no micro-batch. (A fresh "dlv"
+        stamp alone — partitions() moves the delivered watermark on every
+        batch — would make the document differ and plan one zero-row batch
+        per data batch.) The delivered watermark thus rides only on
+        documents that advance or change their capture set. The restore
+        guards still hold:
+          (a) a fresh reader has no previous document, so its first plan
+              is the anchor, as before;
+          (b) every new document still stamps dlv from committed evidence
+              only, and every genuine slice's committed start still
+              clamps the cursor — the checkpointed floor may be older, a
+              lower floor, never a wrong one;
+          (c) a reused document plans no batch, so no stream range is
+              ever sliced under its older stamp: every planned range ends
+              at a freshly stamped document."""
+        doc = self._offset_dict("stream", hw, off, dlv=self._seen)
+        prev = self._last_end
+        if prev is not None and {**prev, "dlv": doc["dlv"]} == doc:
+            return prev
+        self._last_end = doc
+        return doc
 
     def partitions(self, start: dict, end: dict):
         # Spark hands back whatever offset JSON the checkpoint holds —
@@ -776,7 +803,7 @@ class CdcBinlogStreamReader(DataSourceStreamReader):
             FROM (
               SELECT *, {_OP_SQL} AS __op,
                      row_number() OVER (PARTITION BY user_id
-                                        ORDER BY ts DESC, event_id DESC) AS rn
+                                        ORDER BY {_OFFSET_DESC}) AS rn
               FROM log
               WHERE user_id >= {partition.key_lo} AND user_id < {partition.key_hi}
                 AND event_id <= {partition.hw}
@@ -857,7 +884,8 @@ class CdcBinlogDataSource(DataSource):
     ``Trigger.AvailableNow`` (the engine logs "does not support
     Trigger.AvailableNow. Falling back to single batch") — a bounded drain
     of a rate-limited stream therefore uses a processing-time trigger with
-    ``processAllAvailable()``/``stop()``, not availableNow.
+    ``processAllAvailable()``/``stop()``, not availableNow (the
+    ``streaming.changelog.drain`` helper).
     """
 
     @classmethod

@@ -357,12 +357,32 @@ class HybridCdcSource:
     def read_all(self) -> DataFrame:
         """Drain snapshot + stream and materialize the final state —
         the full two-phase protocol in one call (for tests/batch parity).
-        """
-        parts: list[DataFrame] = []
-        while (b := self.next_snapshot_batch()) is not None:
-            parts.append(b)
-        parts.append(self.stream_batch())
-        union = parts[0]
-        for p in parts[1:]:
-            union = union.unionByName(p)
+
+        The chunks ``next_snapshot_batch`` would still read are built as
+        ONE pass: a single filter keeps, per pending chunk, the log window
+        up to that chunk's high watermark (chunks are disjoint key
+        ranges, so one normalize over the windows equals the union of the
+        per-chunk normalizes), then the stream batch is unioned in and
+        normalized once. Chunk, phase and stream-offset state advance
+        exactly as the chunk-at-a-time reads would advance them."""
+        pending = [
+            (c, hw) for c, hw in zip(self.state.chunks, self._watermarks) if not c.done
+        ]
+        union = None
+        if pending:
+            k = f"`{self.key}`"
+            windows = " ".join(
+                f"WHEN {k} >= {c.lo} AND {k} < {c.hi} THEN event_id <= {hw}"
+                for c, hw in pending
+            )
+            snapshot = self.log.filter(f"CASE {windows} ELSE FALSE END")
+            union = changelog_normalize(snapshot, key_cols=[self.key]).withColumn(
+                "op", F.lit("insert")
+            )
+            for c, hw in pending:
+                c.hw, c.done = hw, True
+            self.state.phase = "stream"
+            self.state.stream_offset = min(c.hw for c in self.state.chunks)
+        stream = self.stream_batch()
+        union = stream if union is None else union.unionByName(stream)
         return changelog_normalize(union, key_cols=[self.key])

@@ -12,10 +12,11 @@ so the engine's contract is:
   (normalize-then-aggregate, SURVEY.md §4).
 
 Two materialization strategies (``materialize_latest_state``): the DEFAULT
-routes through ``stateful.streaming_changelog_normalize``
-(applyInPandasWithState — row-level incremental state, O(changed keys) per
-epoch, appended to an update log); the ``rewrite`` fallback is the
-format-agnostic foreachBatch full-store MERGE (O(state) per epoch).
+routes through ``stateful.streaming_changelog_normalize`` (a ``max_by``
+streaming aggregation — row-level incremental state in the JVM state
+store, O(changed keys) per epoch, appended to an update log); the
+``rewrite`` fallback is the format-agnostic foreachBatch full-store MERGE
+(O(state) per epoch).
 
 The streaming source is file-based Debezium-envelope JSON — the exact wire
 shape of the reference's JsonDebeziumDeserializationSchema
@@ -30,10 +31,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from flink_cdc_connectors_spark.sources.envelope import (
-    DEBEZIUM_ENVELOPE_SCHEMA,
-    parse_debezium_json,
-)
+from flink_cdc_connectors_spark.sources.envelope import parse_debezium_json
 
 
 def read_changelog_stream(
@@ -124,10 +122,31 @@ def _append_state_updates(batch_df: DataFrame, state_dir: str) -> None:
     The stateful path's store is an append-only update LOG (LSM-style):
     each epoch writes only the keys whose state advanced — O(batch), not
     O(state) — and the read side resolves latest-per-key. The per-key
-    dedup already happened in the state store (applyInPandasWithState), so
+    dedup already happened in the state store (the max_by aggregate), so
     batch sizes here are bounded by distinct keys per trigger."""
     out = batch_df.withColumn("ts", F.timestamp_millis(F.col("ts_ms"))).drop("ts_ms")
     out.write.mode("append").parquet(state_dir)
+
+
+def drain(writer):
+    """Start ``writer`` and run it until every input visible now is
+    processed, then stop it; returns the stopped query (its
+    ``awaitTermination`` returns at once) and raises the query's error.
+
+    This is the bounded drain ``Trigger.AvailableNow`` promises. Spark's
+    Python data sources (``cdc_binlog``) have no admission-control hook,
+    so on them availableNow falls back to ONE batch — with
+    ``maxOffsetsPerBatch`` the rest of the log would be silently dropped.
+    The default trigger plus ``processAllAvailable()`` drains every
+    source, file sources included."""
+    q = writer.start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    if q.exception() is not None:
+        raise q.exception()
+    return q
 
 
 def materialize_latest_state(
@@ -140,18 +159,17 @@ def materialize_latest_state(
 ):
     """Run the stream -> latest-state materialization. Returns the
     StreamingQuery; with ``available_now`` the query drains all
-    currently-visible input and stops.
+    currently-visible input (see :func:`drain`) and is returned stopped.
 
-    ``strategy='stateful'`` (default): ChangelogNormalize via
-    ``applyInPandasWithState`` — per-key row-level state in Spark's state
-    store (the reference's keyed state backend), update-mode emissions
-    appended to an update log. Per-epoch write cost is O(changed keys).
+    ``strategy='stateful'`` (default): ChangelogNormalize as a ``max_by``
+    streaming aggregation — per-key row-level state in Spark's state store
+    (the reference's keyed state backend), update-mode emissions appended
+    to an update log. Per-epoch write cost is O(changed keys).
 
     ``strategy='rewrite'``: the foreachBatch full-store MERGE fallback —
     normalize(store ∪ batch) rewritten per epoch. Correct and
-    format-agnostic, but O(state) per epoch; use when the payload schema
-    can't be expressed as a fixed state StructType (e.g. nested MAP state)
-    or to materialize directly into a plain one-row-per-key table.
+    format-agnostic, but O(state) per epoch; use it to materialize
+    directly into a plain one-row-per-key table.
     """
     if strategy == "rewrite":
         writer = (
@@ -164,19 +182,12 @@ def materialize_latest_state(
     elif strategy == "stateful":
         if len(tuple(key_cols)) != 1:
             raise ValueError("stateful strategy keys state by a single column")
-        from flink_cdc_connectors_spark.sources.envelope import METADATA_COLUMNS
         from flink_cdc_connectors_spark.streaming.stateful import (
             streaming_changelog_normalize,
         )
 
-        key = tuple(key_cols)[0]
-        payload = [
-            f
-            for f in changelog_stream.schema.fields
-            if f.name not in METADATA_COLUMNS and f.name != key
-        ]
         normalized = streaming_changelog_normalize(
-            changelog_stream, key_col=key, payload_fields=payload
+            changelog_stream, key_col=tuple(key_cols)[0]
         )
         writer = (
             normalized.writeStream.outputMode("update")
@@ -185,9 +196,7 @@ def materialize_latest_state(
         )
     else:
         raise ValueError(f"strategy must be 'stateful' or 'rewrite', got {strategy!r}")
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain(writer) if available_now else writer.start()
 
 
 def read_latest_state(

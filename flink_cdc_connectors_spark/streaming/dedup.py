@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from flink_cdc_connectors_spark.functions import text as T
+from flink_cdc_connectors_spark.streaming.changelog import drain
 
 
 def with_text_hash(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -130,7 +131,10 @@ def materialize_stream_dedup_minhash(
     available_now: bool = True,
 ):
     """Wire the two stages: stateful band dedup in the streaming plan,
-    per-batch doc regroup + append in foreachBatch. Returns the query."""
+    per-batch doc regroup + append in foreachBatch. Returns the query;
+    with ``available_now`` it drains the visible input (see
+    :func:`~flink_cdc_connectors_spark.streaming.changelog.drain`) and is
+    returned stopped."""
     doc_cols = list(doc_stream.columns)
     deduped = stream_dedup_minhash_bands(doc_stream, text_col, num_bands)
     writer = (
@@ -142,6 +146,4 @@ def materialize_stream_dedup_minhash(
         )
         .option("checkpointLocation", checkpoint_dir)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain(writer) if available_now else writer.start()

@@ -1,22 +1,19 @@
-"""Custom stateful streaming operators (applyInPandasWithState).
+"""Stateful streaming operators: ChangelogNormalize and the patch fold.
 
-`streaming_changelog_normalize` is Flink's ChangelogNormalize as a true
-Spark stateful operator: per-key state in the state store holds the
-latest-by-offset event; every micro-batch emits the keys whose state
-changed (update semantics — exactly what the reference's upsert sinks
-consume). Unlike the foreachBatch rewrite in ``changelog.py`` (which
-rewrites the whole store per epoch), state here is row-level and
-incremental — the Structured Streaming analog of Flink's keyed state
-backend — and is the DEFAULT path of ``materialize_latest_state``.
+`streaming_changelog_normalize` is Flink's ChangelogNormalize as a Spark
+streaming aggregation: ``groupBy(key).agg(max_by(event, offset))`` keeps
+the latest-by-offset event per key in the JVM state store, and update
+mode emits every key the micro-batch touched with its current state
+(update semantics — exactly what the reference's upsert sinks consume).
+Unlike the foreachBatch rewrite in ``changelog.py`` (which rewrites the
+whole store per epoch), state here is row-level and incremental — the
+Structured Streaming analog of Flink's keyed state backend — and is the
+DEFAULT path of ``materialize_latest_state``. No event leaves the JVM.
 
-The operator is schema-parameterized: state/output StructTypes are built
-from the captured table's payload schema (the reference builds one
-deserializer+state serializer per table from schema history the same way —
-RowDataDebeziumDeserializeSchema createConverter recursion).
-
-Arrow moves batches between JVM and Python; per-key comparison is a few
-pandas ops — this is the sanctioned custom-stateful path the brief's
-"applyInPandasWithState for custom stateful operators" refers to.
+`streaming_patch_fold` is the one operator that needs custom state:
+partial (MongoDB patch) images must fold in offset order, so it runs as
+``applyInPandasWithState``, with Arrow moving batches between the JVM and
+Python.
 """
 
 from __future__ import annotations
@@ -25,6 +22,7 @@ from typing import Any, Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DataType,
@@ -37,32 +35,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-# Default payload for the events fixture (matches EVENT_PAYLOAD_SCHEMA minus
-# the key column, which is carried by the groupBy key).
-_DEFAULT_PAYLOAD = [
-    StructField("value", DoubleType()),
-    StructField("props", StringType()),
-]
-
-# Back-compat exports (the original fixed-schema form).
-STATE_SCHEMA = StructType(
-    [
-        StructField("ts_ms", LongType()),
-        StructField("event_id", LongType()),
-        StructField("op", StringType()),
-        *_DEFAULT_PAYLOAD,
-    ]
-)
-
-OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("op", StringType()),
-        *_DEFAULT_PAYLOAD,
-        StructField("ts_ms", LongType()),
-        StructField("event_id", LongType()),
-    ]
-)
+from flink_cdc_connectors_spark.operators.cdc import _OFFSET_ORDER
+from flink_cdc_connectors_spark.sources.envelope import METADATA_COLUMNS
 
 
 def _to_py(value: Any, dtype: DataType) -> Any:
@@ -79,109 +53,40 @@ def _to_py(value: Any, dtype: DataType) -> Any:
     return value
 
 
-def make_changelog_normalize(
-    key_col: str = "user_id",
-    payload_fields: list[StructField] | None = None,
-    key_type: DataType | None = None,
-) -> tuple[Callable, StructType, StructType]:
-    """Build the (function, output schema, state schema) triple for a
-    table's ChangelogNormalize given its payload schema.
-
-    State per key: (ts_ms, event_id, op, *payload) of the latest event.
-    Output per advance: (key, op, *payload, ts_ms, event_id)."""
-    payload = list(payload_fields) if payload_fields is not None else list(_DEFAULT_PAYLOAD)
-    state_schema = StructType(
-        [
-            StructField("ts_ms", LongType()),
-            StructField("event_id", LongType()),
-            StructField("op", StringType()),
-            *payload,
-        ]
-    )
-    output_schema = StructType(
-        [
-            StructField(key_col, key_type or LongType()),
-            StructField("op", StringType()),
-            *payload,
-            StructField("ts_ms", LongType()),
-            StructField("event_id", LongType()),
-        ]
-    )
-    payload_names = [f.name for f in payload]
-    payload_types = [f.dataType for f in payload]
-
-    def normalize_fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        """Keep the max-offset event per key; emit the key's state when it
-        advances. Offset order = (ts_ms, event_id) — BinlogOffset.compareTo."""
-        cur: tuple[Any, ...] | None = state.get if state.exists else None
-        best = cur  # (ts_ms, event_id, op, *payload)
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            # normalize to ms regardless of the Arrow datetime unit (ns vs us)
-            pdf = pdf.assign(
-                ts_ms=(pdf["ts"].astype("datetime64[ms]").astype("int64"))
-            )
-            top = pdf.sort_values(["ts_ms", "event_id"]).iloc[-1]
-            cand = (
-                int(top["ts_ms"]),
-                int(top["event_id"]),
-                str(top["op"]),
-                *[_to_py(top[n], t) for n, t in zip(payload_names, payload_types)],
-            )
-            if best is None or (cand[0], cand[1]) > (best[0], best[1]):
-                best = cand
-        if best is not None and best != cur:
-            state.update(best)
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]],
-                    "op": [best[2]],
-                    **{n: [best[3 + i]] for i, n in enumerate(payload_names)},
-                    "ts_ms": [best[0]],
-                    "event_id": [best[1]],
-                }
-            )
-
-    return normalize_fn, output_schema, state_schema
-
-
 def streaming_changelog_normalize(
-    changelog_stream: DataFrame,
-    key_col: str = "user_id",
-    payload_fields: list[StructField] | None = None,
+    changelog_stream: DataFrame, key_col: str = "user_id"
 ) -> DataFrame:
-    """Changelog stream -> per-key latest-state updates (op='delete' rows
-    are emitted as tombstone updates; the consumer drops them from its
-    materialized view). Use outputMode('update').
+    """Changelog stream -> per-key latest-state updates
+    ``(key, op, *payload, ts_ms, event_id)``; op='delete' rows are emitted
+    as tombstone updates (the consumer drops them from its materialized
+    view). Use outputMode('update').
 
-    ``payload_fields`` defaults to the events fixture's (value, props); pass
-    the captured table's payload StructFields (minus the key) otherwise."""
-    payload = list(payload_fields) if payload_fields is not None else list(_DEFAULT_PAYLOAD)
-    key_type = changelog_stream.schema[key_col].dataType
-    fn, out_schema, state_schema = make_changelog_normalize(
-        key_col, payload, key_type=key_type
+    The payload is every column of the stream that is neither the key nor
+    envelope metadata. The offset order is ``changelog_normalize``'s:
+    (ts, event_id), then ``schema_epoch`` when the stream carries one, so
+    a re-snapshot image that ties a raw change on (ts, event_id) wins by
+    its newer decode. Update mode also re-emits a key whose late, older
+    event did not advance it — with the unchanged state, so the last
+    emission per key is always latest-by-offset."""
+    payload = [
+        c for c in changelog_stream.columns if c not in METADATA_COLUMNS and c != key_col
+    ]
+    order = list(_OFFSET_ORDER) + (
+        ["schema_epoch"] if "schema_epoch" in changelog_stream.columns else []
     )
-    cols = [key_col, "op", *[f.name for f in payload], "ts", "event_id"]
+    event = ", ".join(f"`{c}`" for c in ["op", *payload, "ts", "event_id"])
+    offset = ", ".join(f"`{c}`" for c in order)
     return (
-        changelog_stream.select(*cols)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+        changelog_stream.groupBy(key_col)
+        .agg(F.expr(f"max_by(struct({event}), struct({offset})) AS __e"))
+        .selectExpr(
+            f"`{key_col}`",
+            "__e.op",
+            *[f"__e.`{c}`" for c in payload],
+            "unix_millis(__e.ts) AS ts_ms",
+            "__e.event_id",
         )
     )
-
-
-# Back-compat alias: the original module-level function name.
-def _normalize_fn(key, pdfs, state):
-    fn, _, _ = make_changelog_normalize()
-    return fn(key, pdfs, state)
 
 
 # ---------------------------------------------------------------------------

@@ -915,6 +915,117 @@ def test_dsv2_narrowed_key_ranges_stop_emitting_at_restart(spark, tmp_path):
     assert len(ids) == len(set(ids)), "surviving-range tail double-emitted"
 
 
+def test_dsv2_drained_tail_runs_no_zero_row_batch(spark, tmp_path):
+    """Every micro-batch of a rate-limited, growing-log drain carries
+    rows: once the tail starts landing, an offset document that does not
+    advance must not plan a batch (a fresh delivered-watermark stamp
+    alone used to run one zero-row batch per data batch)."""
+    import duckdb
+
+    log = tmp_path / "log"
+    log.mkdir()
+    con = duckdb.connect()
+    copy = "COPY (SELECT * FROM '{src}' WHERE {cond}) TO '{dst}' (FORMAT PARQUET)"
+    con.execute(copy.format(src=EVENTS, cond="event_id <= 899", dst=log / "p1.parquet"))
+    q = (
+        spark.readStream.format("cdc_binlog")
+        .option("path", str(log))
+        .option("startupMode", "specific-offset")
+        .option("startupOffset", 799)
+        .option("maxOffsetsPerBatch", 50)
+        .option("refreshLatest", "true")
+        .load()
+        .writeStream.foreachBatch(lambda df, bid: df.count())
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        # the log grows: the next increment lands while the query runs
+        con.execute(copy.format(src=EVENTS, cond="event_id > 899", dst=log / "p2.parquet"))
+        q.processAllAvailable()
+        progress = list(q.recentProgress)
+    finally:
+        q.stop()
+        con.close()
+    # executed batches only (an idle-trigger report runs no sink)
+    ran = [p for p in progress if "addBatch" in p.durationMs]
+    first = next(i for i, p in enumerate(ran) if p.numInputRows > 0)
+    tail = ran[first:]
+    assert sum(p.numInputRows for p in tail) == 200
+    assert [p.numInputRows for p in tail if p.numInputRows == 0] == [], (
+        f"zero-row batches in the drain: {[p.numInputRows for p in tail]}"
+    )
+
+
+def test_dsv2_materialize_default_drain_keeps_rate_limited_tail(spark, tmp_path):
+    """``materialize_latest_state`` with default arguments over a
+    rate-limited ``cdc_binlog`` stream drains the WHOLE log: the snapshot
+    batch and every capped tail batch. (Spark's Python sources fall back
+    to a single batch under Trigger.AvailableNow, which used to stop
+    after the snapshot and drop the tail without an error.)"""
+    import duckdb
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from flink_cdc_connectors_spark.streaming import (
+        materialize_latest_state,
+        read_latest_state,
+    )
+
+    n, keys = 20_000, 500
+    rng = np.random.default_rng(7)
+    log = tmp_path / "log"
+    log.mkdir()
+    ts_us = 1_704_067_200_000_000 + np.sort(rng.integers(0, 30 * 86_400_000_000, n))
+    etypes = np.array(["signup", "error", "purchase", "view", "click"])
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": np.arange(n, dtype=np.int64),
+                "ts": pa.array(ts_us).cast(pa.timestamp("us")),
+                "user_id": rng.integers(0, keys, n),
+                "event_type": etypes[rng.integers(0, len(etypes), n)],
+                "value": np.round(rng.exponential(50.0, n), 2),
+                "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, n)],
+            }
+        ),
+        log / "part-0.parquet",
+    )
+    stream = (
+        spark.readStream.format("cdc_binlog")
+        .option("path", str(log))
+        .option("snapshotFraction", "0.5")
+        .option("maxOffsetsPerBatch", 2000)
+        .load()
+    )
+    state_dir = str(tmp_path / "state")
+    q = materialize_latest_state(stream, state_dir, str(tmp_path / "ckpt"))
+    q.awaitTermination(300)
+    got = {
+        (r.user_id, r.event_id, r.value)
+        for r in read_latest_state(spark, state_dir).select(
+            "user_id", "event_id", "value"
+        ).collect()
+    }
+    con = duckdb.connect()
+    try:
+        want = set(
+            con.execute(
+                f"""SELECT user_id, event_id, value FROM (
+                  SELECT *, row_number() OVER (PARTITION BY user_id
+                                               ORDER BY ts DESC, event_id DESC) AS rn
+                  FROM '{log}/*.parquet'
+                ) WHERE rn = 1 AND event_type <> 'error'"""
+            ).fetchall()
+        )
+    finally:
+        con.close()
+    assert len(want) > 0
+    assert got == want, f"{len(want - got)} keys missing or stale, {len(got - want)} extra"
+
+
 def test_dsv2_capless_v2_checkpoint_restores_without_backfill():
     """A v2 (capless) checkpoint restored by a keyRanges-configured reader
     means the old run captured the WHOLE key space — nothing can be newly

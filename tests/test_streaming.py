@@ -299,6 +299,57 @@ def test_stateful_streaming_normalize(spark, sf_dir, envelope_dir):
     assert sorted(live.index) == sorted(want_live["user_id"])
 
 
+def test_stream_normalize_breaks_offset_ties_by_schema_epoch(spark, tmp_path):
+    """A re-snapshot image shares its (ts, event_id) with the raw change
+    already emitted under the old decode; the stream normalize must keep
+    the higher ``schema_epoch`` whatever the arrival order — inside one
+    micro-batch and across batches — exactly as ``changelog_normalize``
+    orders."""
+    import datetime
+    import time
+
+    from flink_cdc_connectors_spark.streaming.stateful import (
+        streaming_changelog_normalize,
+    )
+
+    schema = (
+        "op string, user_id long, value double, props string, ts timestamp, "
+        "event_id long, schema_epoch int"
+    )
+    t = datetime.datetime(2024, 1, 1)
+    first = [
+        ("update", 1, 1.5, "{}", t, 5, 1),
+        ("update", 1, 9.0, "{}", t, 5, 0),  # the old decode, arriving last
+        ("update", 2, 2.5, "{}", t, 6, 1),
+    ]
+    late = [("update", 2, 8.0, "{}", t, 6, 0)]  # the old decode, a batch later
+    src = str(tmp_path / "in")
+    spark.createDataFrame(first, schema).coalesce(1).write.parquet(src + "/b1")
+    time.sleep(1.1)  # distinct mtimes: the file source orders oldest-first
+    spark.createDataFrame(late, schema).coalesce(1).write.parquet(src + "/b2")
+
+    emitted = []
+    stream = (
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src + "/*")
+    )
+    q = (
+        streaming_changelog_normalize(stream)
+        .writeStream.outputMode("update")
+        .foreachBatch(lambda df, bid: emitted.extend((bid, r) for r in df.collect()))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+    assert [p.numInputRows for p in q.recentProgress if p.numInputRows] == [3, 1]
+    last = {r["user_id"]: r["value"] for _, r in sorted(emitted, key=lambda e: e[0])}
+    want = {
+        r["user_id"]: r["value"]
+        for r in changelog_normalize(spark.createDataFrame(first + late, schema)).collect()
+    }
+    assert last == want == {1: 1.5, 2: 2.5}
+
+
 def test_stream_dedup_exact_cross_batch(spark, sf_dir, tmp_path):
     """First-seen-wins exact dedup across micro-batches: a duplicate
     arriving in a LATER batch is suppressed by the state store."""
