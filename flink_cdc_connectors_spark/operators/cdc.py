@@ -14,7 +14,7 @@ watermark table.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -23,14 +23,17 @@ from pyspark.sql import functions as F
 # flink-connector-mysql-cdc/.../source/offset/BinlogOffset.java:173-255):
 # compare timestamps, then file/pos — here the monotonic event_id.
 _OFFSET_ORDER = ("ts", "event_id")
-# ... and as the descending SQL sort list (latest first).
-_OFFSET_DESC = ", ".join(f"{c} DESC" for c in _OFFSET_ORDER)
 
 
-def _offset_order(*, desc: bool = False) -> list[Column]:
-    """:data:`_OFFSET_ORDER` as sort Columns."""
-    cols = [F.col(c) for c in _OFFSET_ORDER]
-    return [c.desc() for c in cols] if desc else cols
+def offset_order(columns=(), *, desc: bool = False) -> str:
+    """The resolve order of a changelog with ``columns``, as a SQL list:
+    :data:`_OFFSET_ORDER`, then ``schema_epoch`` when the changelog carries
+    one (see :func:`changelog_normalize`). Every latest-state path ranks
+    by it — the batch normalize, the streaming ``max_by`` aggregates and
+    every reader of their store — so a reader can never pick a different
+    row than the writer kept. ``desc`` renders a latest-first sort list."""
+    cols = [*_OFFSET_ORDER, *(["schema_epoch"] if "schema_epoch" in columns else [])]
+    return ", ".join(f"{c} DESC" if desc else c for c in cols)
 
 
 def changelog_normalize(
@@ -63,9 +66,7 @@ def changelog_normalize(
     # Single-parse form (round 13): this helper fronts a dozen tier-A
     # keys and some builders call it several times per run — the window
     # rank builds as one selectExpr parse instead of ~45 gateway calls.
-    order = _OFFSET_DESC
-    if "schema_epoch" in changelog.columns:
-        order += ", schema_epoch DESC"
+    order = offset_order(changelog.columns, desc=True)
     keys = ", ".join(f"`{k}`" for k in key_cols)
     out = (
         changelog.selectExpr(
@@ -506,7 +507,7 @@ def to_retract_stream(
 
     Output: row_kind ('+I','-U','+U','-D'), keys, ``value``, ts, event_id.
     """
-    w = Window.partitionBy(*key_cols).orderBy(*_offset_order())
+    w = Window.partitionBy(*key_cols).orderBy(*_OFFSET_ORDER)
     # Window expressions can't nest inside a generator — materialize the
     # reconstructed 'before' first (same shuffle either way).
     changelog = changelog.withColumn(

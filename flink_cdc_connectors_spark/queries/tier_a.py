@@ -1534,7 +1534,7 @@ def cdc_dsv2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     statement (specific-offset startup — the restart-from-checkpoint
     shape, MySqlSourceOptions scan.startup.specific-offset.pos) binds the
     DSv2 source via ``create_cdc_stream``; the unbounded stream drains
-    with an ``availableNow`` trigger into a parquet sink; the sink is read
+    (``streaming.changelog.drain``) into a parquet sink; the sink is read
     back and aggregated per key. Counts and DECIMAL-safe sums must equal a
     direct batch replay of the post-offset log — proving the source's
     partition planning, offset filtering, and exactly-once drain, not just
@@ -1543,13 +1543,14 @@ def cdc_dsv2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     The offset split uses integer arithmetic (max*8//10) on BOTH sides:
     DuckDB CAST-to-BIGINT rounds where Python truncates. Scale: the DSv2
     source plans one input partition per chunk (sources/datasource.py);
-    availableNow preserves the streaming execution path with a bounded
-    run — the production form is the same query without the trigger."""
+    the drain keeps the streaming execution path with a bounded run —
+    the production form is the same query left running."""
     import os
     import shutil
     import uuid
 
     from flink_cdc_connectors_spark.sources.ddl import create_cdc_stream
+    from flink_cdc_connectors_spark.streaming.changelog import drain
 
     e = load_table(spark, sf_dir, "events")
     max_off = e.agg(F.max("event_id")).first()[0]
@@ -1568,24 +1569,12 @@ def cdc_dsv2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.basename(os.path.normpath(sf_dir)), f"dsv2_{uuid.uuid4().hex[:8]}",
     )
     out, ckpt = os.path.join(scratch, "out"), os.path.join(scratch, "ckpt")
-    q = (
+    drain(
         stream.writeStream.outputMode("append")
         .format("parquet")
         .option("path", out)
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
     )
-    try:
-        finished = q.awaitTermination(300)
-        if not finished:
-            # a timed-out drain must be an ERROR, not silently-partial data
-            raise TimeoutError(
-                "cdc_dsv2_stream: availableNow drain exceeded 300s; "
-                "refusing to aggregate a partial sink"
-            )
-    finally:
-        q.stop()
     drained = spark.read.parquet(out)
     result = drained.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),

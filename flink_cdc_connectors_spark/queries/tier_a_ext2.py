@@ -1541,6 +1541,7 @@ def cdc_dsv2_added_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     import duckdb
 
     from flink_cdc_connectors_spark.sources import datasource
+    from flink_cdc_connectors_spark.streaming.changelog import drain
 
     datasource.register(spark)
     e = load_table(spark, sf_dir, "events")
@@ -1576,10 +1577,10 @@ def cdc_dsv2_added_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out, ckpt = os.path.join(scratch, "out"), os.path.join(scratch, "ckpt")
 
-        def drain(path: str, ranges: list[list[int]]) -> None:
+        def run(path: str, ranges: list[list[int]]) -> None:
             import json
 
-            q = (
+            drain(
                 spark.readStream.format("cdc_binlog")
                 .option("path", path)
                 .option("numChunks", 2)
@@ -1594,20 +1595,10 @@ def cdc_dsv2_added_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .format("parquet")
                 .option("path", out)
                 .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
             )
-            try:
-                if not q.awaitTermination(300):
-                    raise TimeoutError(
-                        "cdc_dsv2_added_tables: drain exceeded 300s; refusing "
-                        "to materialize a partial sink"
-                    )
-            finally:
-                q.stop()
 
-        drain(early_log, [[int(k_lo), mid]])          # run 1: half the tables
-        drain(src_path, [[int(k_lo), mid], [mid, k_hi]])  # run 2: widened regex
+        run(early_log, [[int(k_lo), mid]])          # run 1: half the tables
+        run(src_path, [[int(k_lo), mid], [mid, k_hi]])  # run 2: widened regex
 
         from flink_cdc_connectors_spark.operators.cdc import changelog_normalize
 

@@ -36,7 +36,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from flink_cdc_connectors_spark.operators.cdc import _OFFSET_DESC
+from flink_cdc_connectors_spark.operators.cdc import offset_order
 from flink_cdc_connectors_spark.sources.envelope import op_sql
 from flink_cdc_connectors_spark.sources.offsets import BinlogOffset
 from flink_cdc_connectors_spark.sources.schema_history import SchemaHistory
@@ -803,7 +803,7 @@ class CdcBinlogStreamReader(DataSourceStreamReader):
             FROM (
               SELECT *, {_OP_SQL} AS __op,
                      row_number() OVER (PARTITION BY user_id
-                                        ORDER BY {_OFFSET_DESC}) AS rn
+                                        ORDER BY {offset_order(desc=True)}) AS rn
               FROM log
               WHERE user_id >= {partition.key_lo} AND user_id < {partition.key_hi}
                 AND event_id <= {partition.hw}

@@ -1,5 +1,7 @@
 """Structured Streaming layer: changelog streams, windowed aggregation,
-and foreachBatch materialization (SURVEY.md §7 step 4)."""
+latest-state materialization as ``max_by`` streaming aggregates (the
+changelog normalize and the Mongo patch fold), and streaming dedup
+(SURVEY.md §7 step 4)."""
 
 from flink_cdc_connectors_spark.streaming.dedup import (
     materialize_stream_dedup_minhash,

@@ -11,12 +11,13 @@ so the engine's contract is:
   over the store are retract-correct by construction
   (normalize-then-aggregate, SURVEY.md §4).
 
-Two materialization strategies (``materialize_latest_state``): the DEFAULT
-routes through ``stateful.streaming_changelog_normalize`` (a ``max_by``
-streaming aggregation — row-level incremental state in the JVM state
-store, O(changed keys) per epoch, appended to an update log); the
-``rewrite`` fallback is the format-agnostic foreachBatch full-store MERGE
-(O(state) per epoch).
+``materialize_latest_state`` runs ChangelogNormalize as a ``max_by``
+streaming aggregation (``stateful.streaming_changelog_normalize``):
+row-level incremental state in the JVM state store, O(changed keys) per
+epoch, whose update-mode emissions are appended to an update log.
+``read_latest_state`` resolves the log by the same offset order the
+aggregate kept (``operators.cdc.offset_order``), so the read-back is the
+state store's answer; ``compact_tombstones`` bounds the log.
 
 The streaming source is file-based Debezium-envelope JSON — the exact wire
 shape of the reference's JsonDebeziumDeserializationSchema
@@ -26,12 +27,14 @@ any real Debezium topic/file dump plugs in unchanged.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flink_cdc_connectors_spark.operators.cdc import changelog_normalize
 from flink_cdc_connectors_spark.sources.envelope import parse_debezium_json
+from flink_cdc_connectors_spark.streaming.stateful import (
+    streaming_changelog_normalize,
+)
 
 
 def read_changelog_stream(
@@ -61,59 +64,6 @@ def stream_changelog_from_events(
 ) -> DataFrame:
     """Alias with the fixture-centric name used by tests."""
     return read_changelog_stream(spark, events_json_dir, **kwargs)
-
-
-def _merge_latest_state(
-    batch_df: DataFrame, state_dir: str, key_cols: list[str]
-) -> None:
-    """MERGE one micro-batch of changelog rows into the latest-state store.
-
-    The upsert contract of the reference's sinks (insert/update replace by
-    PK, delete removes — RecordUtils.upsertBinlog:77-114 applied
-    continuously). Without a transactional table format in this container,
-    the store is a parquet directory rewritten per epoch:
-
-        new_state = normalize( current_state(as inserts)  UNION  batch )
-
-    With Delta/Iceberg available this becomes ``MERGE INTO`` keyed on the
-    PK — same semantics, row-level instead of rewrite. The rewrite is
-    correct (idempotent per epoch, resumable from checkpoint) and the
-    normalize is one hash shuffle on the key.
-
-    Delete events are kept in the store as TOMBSTONES (op='delete') rather
-    than removed: micro-batches need not respect offset order across keys
-    (the file source may deliver a stale event after the delete that
-    supersedes it), and with tombstones retained the merge is fully
-    order-independent — the offset comparison decides the winner no matter
-    the arrival order. ``read_latest_state`` filters them out. This is
-    exactly Kafka log-compaction semantics; a production store compacts
-    tombstones once the source offset passes them.
-    """
-    spark = batch_df.sparkSession
-    batch_cols = batch_df.columns
-    if os.path.isdir(state_dir) and any(
-        f.endswith(".parquet") for f in os.listdir(state_dir)
-    ):
-        current = spark.read.parquet(state_dir)
-    else:
-        current = spark.createDataFrame([], batch_df.schema)
-    merged = current.select(*batch_cols).unionByName(batch_df)
-    w = Window.partitionBy(*key_cols).orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    new_state = (
-        merged.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    # Rewrite atomically enough for a local store: write tmp, swap.
-    tmp = state_dir.rstrip("/") + ".tmp"
-    new_state.write.mode("overwrite").parquet(tmp)
-    import shutil
-
-    if os.path.isdir(state_dir):
-        shutil.rmtree(state_dir)
-    os.replace(tmp, state_dir)
 
 
 def _append_state_updates(batch_df: DataFrame, state_dir: str) -> None:
@@ -155,47 +105,23 @@ def materialize_latest_state(
     checkpoint_dir: str,
     key_cols: list[str] = ("user_id",),
     available_now: bool = True,
-    strategy: str = "stateful",
 ):
     """Run the stream -> latest-state materialization. Returns the
     StreamingQuery; with ``available_now`` the query drains all
     currently-visible input (see :func:`drain`) and is returned stopped.
 
-    ``strategy='stateful'`` (default): ChangelogNormalize as a ``max_by``
-    streaming aggregation — per-key row-level state in Spark's state store
-    (the reference's keyed state backend), update-mode emissions appended
-    to an update log. Per-epoch write cost is O(changed keys).
-
-    ``strategy='rewrite'``: the foreachBatch full-store MERGE fallback —
-    normalize(store ∪ batch) rewritten per epoch. Correct and
-    format-agnostic, but O(state) per epoch; use it to materialize
-    directly into a plain one-row-per-key table.
+    ChangelogNormalize runs as a ``max_by`` streaming aggregation keyed by
+    ``key_cols`` — per-key row-level state in Spark's state store (the
+    reference's keyed state backend) — and its update-mode emissions are
+    appended to an update log in ``state_dir``. Per-epoch write cost is
+    O(changed keys); :func:`read_latest_state` resolves the log.
     """
-    if strategy == "rewrite":
-        writer = (
-            changelog_stream.writeStream.outputMode("append")
-            .foreachBatch(
-                lambda df, epoch: _merge_latest_state(df, state_dir, list(key_cols))
-            )
-            .option("checkpointLocation", checkpoint_dir)
-        )
-    elif strategy == "stateful":
-        if len(tuple(key_cols)) != 1:
-            raise ValueError("stateful strategy keys state by a single column")
-        from flink_cdc_connectors_spark.streaming.stateful import (
-            streaming_changelog_normalize,
-        )
-
-        normalized = streaming_changelog_normalize(
-            changelog_stream, key_col=tuple(key_cols)[0]
-        )
-        writer = (
-            normalized.writeStream.outputMode("update")
-            .foreachBatch(lambda df, epoch: _append_state_updates(df, state_dir))
-            .option("checkpointLocation", checkpoint_dir)
-        )
-    else:
-        raise ValueError(f"strategy must be 'stateful' or 'rewrite', got {strategy!r}")
+    normalized = streaming_changelog_normalize(changelog_stream, key_cols)
+    writer = (
+        normalized.writeStream.outputMode("update")
+        .foreachBatch(lambda df, epoch: _append_state_updates(df, state_dir))
+        .option("checkpointLocation", checkpoint_dir)
+    )
     return drain(writer) if available_now else writer.start()
 
 
@@ -205,19 +131,11 @@ def read_latest_state(
     """Query view over the materialized store: latest row per key, live
     rows only (tombstones filtered) — the upsert-sink read contract.
 
-    Handles both store layouts: the stateful update LOG (several updates
-    per key across epochs — resolve by max offset) and the rewrite store
-    (already one row per key — the window is a no-op)."""
-    state = spark.read.parquet(state_dir)
-    w = Window.partitionBy(*key_cols).orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    latest = (
-        state.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    return latest.filter(F.col("op") != "delete")
+    The update log holds several updates per key across epochs; the
+    resolve is ``changelog_normalize``, whose offset order (with
+    ``schema_epoch`` when the log carries it) is the one the aggregate
+    ranked by, so the read returns the row the state store kept."""
+    return changelog_normalize(spark.read.parquet(state_dir), key_cols)
 
 
 def compact_tombstones(
@@ -235,29 +153,26 @@ def compact_tombstones(
     ``safe_offset`` (the stream's committed position), tombstones at or
     below it can never be contradicted and are dead weight. Superseded
     update-log rows (not latest for their key) are always dropped. Returns
-    the number of tombstone ROWS removed."""
-    state = spark.read.parquet(state_dir)
-    n_before = state.filter(F.col("op") == "delete").count()
-    w = Window.partitionBy(*key_cols).orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    latest = (
-        state.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    kept = latest.filter(
-        (F.col("op") != "delete") | (F.col("event_id") > safe_offset)
-    )
-    n_after = kept.filter(F.col("op") == "delete").count()
-    removed = n_before - n_after
-    if removed:
-        tmp = state_dir.rstrip("/") + ".compact"
-        kept.write.mode("overwrite").parquet(tmp)
-        import shutil
+    the number of tombstone ROWS removed.
 
-        shutil.rmtree(state_dir)
-        os.replace(tmp, state_dir)
+    The compacted rows are appended to the store first; only then are
+    exactly the files that were read deleted. A crash in between leaves
+    duplicate rows, which the resolve collapses, and a file that a live
+    stream appends after the read is left alone."""
+    state = spark.read.parquet(state_dir)
+    read_files = state.inputFiles()
+    n_before = state.filter("op = 'delete'").count()
+    kept = changelog_normalize(state, key_cols, drop_deletes=False).filter(
+        f"op <> 'delete' OR event_id > {int(safe_offset)}"
+    )
+    removed = n_before - kept.filter("op = 'delete'").count()
+    if removed:
+        kept.write.mode("append").parquet(state_dir)
+        jvm = spark._jvm  # noqa: SLF001 — Hadoop FileSystem deletes the checksums too
+        conf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
+        for f in read_files:
+            path = jvm.org.apache.hadoop.fs.Path(f)
+            path.getFileSystem(conf).delete(path, False)
     return removed
 
 

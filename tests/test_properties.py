@@ -114,48 +114,11 @@ def test_normalize_idempotent(spark, raw):
 
 
 # ---------------------------------------------------------------------------
-# Streaming patch fold: pure-function properties (no Spark session needed)
+# Patch fold: the max_by aggregate against a naive ordered replay. Every
+# generated history is one key of ONE DataFrame, so an example is one job.
 # ---------------------------------------------------------------------------
 
-import pandas as pd
-from pyspark.sql.types import LongType, StructField
-
-from flink_cdc_connectors_spark.streaming.stateful import make_patch_fold
-
-
-class _FakeState:
-    """Minimal GroupState stand-in for driving fold_fn directly."""
-
-    def __init__(self):
-        self._t = None
-
-    @property
-    def exists(self):
-        return self._t is not None
-
-    @property
-    def get(self):
-        return self._t
-
-    def update(self, t):
-        self._t = tuple(t)
-
-
-_FIELDS = [StructField("a", LongType()), StructField("b", LongType())]
-
-
-def _mk_pdf(rows):
-    return pd.DataFrame(
-        {
-            "ts": [pd.Timestamp(r["ts"], unit="ms") for r in rows],
-            "event_id": [r["eid"] for r in rows],
-            "op": [r["op"] for r in rows],
-            "a": [r["a"] for r in rows],
-            "a_act": [r["a_act"] for r in rows],
-            "b": [r["b"] for r in rows],
-            "b_act": [r["b_act"] for r in rows],
-        }
-    )
+from flink_cdc_connectors_spark.streaming.stateful import streaming_patch_fold
 
 
 def _naive_fold(rows):
@@ -185,103 +148,80 @@ _event = st.fixed_dictionaries(
         "a_act": st.sampled_from([0, 1]),
         "b": st.one_of(st.none(), st.integers(0, 9)),
         "b_act": st.sampled_from([0, 1]),
+        # the micro-batch the event arrives in, and whether it arrives again
+        "batch": st.integers(0, 3),
+        "again": st.booleans(),
     }
 )
+_histories = st.lists(st.lists(_event, min_size=1, max_size=30), min_size=1, max_size=6)
+_FOLD_COLS = ("user_id", "part", "op", "ts", "eid", "a", "a_act", "b", "b_act")
 
 
-def _run_fold(chunks):
-    fn, _, _ = make_patch_fold("user_id", _FIELDS)
-    state = _FakeState()
-    out = list(fn((1,), iter([_mk_pdf(c) for c in chunks]), state))
-    return state._t, out
+def _fold(spark, rows):
+    """``streaming_patch_fold`` over event dicts, keyed by (user_id, part):
+    {(user_id, part): (alive, {a, b}, (ts_ms, event_id))}."""
+    df = spark.createDataFrame(
+        [tuple(r[c] for c in _FOLD_COLS) for r in rows],
+        "user_id int, part int, op string, ts_ms long, event_id long, "
+        "a long, a_act int, b long, b_act int",
+    ).selectExpr("*", "timestamp_millis(ts_ms) AS ts")
+    return {
+        (r["user_id"], r["part"]): (
+            int(r["op"] != "delete"),
+            {"a": r["a"], "b": r["b"]},
+            (r["ts_ms"], r["event_id"]),
+        )
+        for r in streaming_patch_fold(df.drop("ts_ms"), ["user_id", "part"]).collect()
+    }
 
 
-@given(st.lists(_event, min_size=1, max_size=30), st.data())
-@settings(max_examples=200, deadline=None)
-def test_patch_fold_matches_naive_replay_under_any_chunking(events, data):
-    """The fold must equal a naive ordered replay REGARDLESS of how the
-    micro-batch's rows are split into Arrow chunks and in what order the
-    chunks arrive (the chunk boundary bug class: per-chunk sorting would
-    let the offset guard eat later-chunk patches)."""
-    rows = [dict(e, eid=i) for i, e in enumerate(events)]
-    # arbitrary chunking + arbitrary chunk order
-    n_chunks = data.draw(st.integers(1, min(4, len(rows))))
-    assignment = data.draw(
-        st.lists(st.integers(0, n_chunks - 1), min_size=len(rows), max_size=len(rows))
-    )
-    chunks = [[r for r, c in zip(rows, assignment) if c == k] for k in range(n_chunks)]
-    chunks = [c for c in chunks if c]
-    perm = data.draw(st.permutations(range(len(chunks))))
-    chunks = [chunks[i] for i in perm]
-
-    state_t, out = _run_fold(chunks)
-    alive, vals, off = _naive_fold(rows)
-
-    assert state_t is not None
-    ts_ms, eid, got_alive, got_a, got_b = state_t
-    assert (ts_ms, eid) == off
-    assert got_alive == alive
-    assert got_a == vals["a"] and got_b == vals["b"]
-    # emission mirrors the state
-    assert len(out) == 1
-    emitted = out[0].iloc[0]
-    assert (emitted["op"] == "delete") == (alive == 0)
-
-
-@given(st.lists(_event, min_size=1, max_size=20))
-@settings(max_examples=100, deadline=None)
-def test_patch_fold_redelivery_is_idempotent(events):
-    """Replaying the entire batch again (at-least-once) must not change
-    state and must emit nothing."""
-    rows = [dict(e, eid=i) for i, e in enumerate(events)]
-    fn, _, _ = make_patch_fold("user_id", _FIELDS)
-    state = _FakeState()
-    list(fn((1,), iter([_mk_pdf(rows)]), state))
-    before = state._t
-    again = list(fn((1,), iter([_mk_pdf(rows)]), state))
-    assert state._t == before
-    assert again == []
-
-
-def test_patch_fold_all_na_chunk_is_warning_free_and_dtype_stable():
-    """A chunk whose field column is entirely NA must neither emit the
-    pandas concat FutureWarning nor let a future pandas shift the fold's
-    dtype inference: the fold pins all-NA columns to float64 before concat,
-    and the folded values stay plain Python ints/None either way."""
-    import warnings
-
-    chunk1 = [  # 'b' is all-NA in this chunk
-        {"ts": 1, "eid": 0, "op": "insert", "a": 5, "a_act": 1, "b": None, "b_act": 0},
-        {"ts": 2, "eid": 1, "op": "update", "a": 7, "a_act": 1, "b": None, "b_act": 0},
+def _events_of(histories):
+    return [
+        dict(e, user_id=k, eid=i)
+        for k, h in enumerate(histories)
+        for i, e in enumerate(h)
     ]
-    chunk2 = [  # 'b' is typed here
-        {"ts": 3, "eid": 2, "op": "update", "a": None, "a_act": 0, "b": 9, "b_act": 1},
-    ]
-    with warnings.catch_warnings():
-        warnings.simplefilter("error", FutureWarning)
-        state_t, out = _run_fold([chunk1, chunk2])
-    ts_ms, eid, alive, a, b = state_t
-    assert (ts_ms, eid, alive) == (3, 2, 1)
-    assert a == 7 and type(a) is int
-    assert b == 9 and type(b) is int
 
 
-def test_patch_fold_all_nat_datetime_chunk_does_not_crash():
-    """The all-NA pin must ONLY touch object-dtype columns: an all-NaT
-    datetime64 column (a malformed chunk whose ts is entirely null) must
-    keep its dtype — pandas 2.x raises TypeError on casting DatetimeArray
-    to float64, so an over-broad pin turns a degenerate chunk into a fold
-    crash instead of the stale-offset skip it gets today."""
-    chunk1 = [  # ts all-NaT AND b all-NA in the same chunk
-        {"ts": None, "eid": 0, "op": "insert", "a": 1, "a_act": 1, "b": None, "b_act": 0},
+@settings(
+    max_examples=15,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@given(histories=_histories)
+def test_patch_fold_matches_naive_replay_under_any_chunking(spark, histories):
+    """Split each key's events into micro-batches, in any arrival order:
+    the state after every batch (part = the last batch applied) equals a
+    naive ordered replay of the events delivered so far. An update-mode
+    emission is that state, so a late patch lands at its own offset, as
+    the batch fold over the whole log places it."""
+    events = _events_of(histories)
+    rows = [dict(e, part=p) for e in events for p in range(e["batch"], 4)]
+    want = {
+        (k, p): _naive_fold([e for e in events if e["user_id"] == k and e["batch"] <= p])
+        for k, p in {(r["user_id"], r["part"]) for r in rows}
+    }
+    assert _fold(spark, rows) == want
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@given(histories=_histories)
+def test_patch_fold_redelivery_is_idempotent(spark, histories):
+    """At-least-once delivery: folding the log plus a redelivered subset
+    (part 1) gives the same document as the log alone (part 0) — and as
+    the naive replay."""
+    events = _events_of(histories)
+    rows = [dict(e, part=0) for e in events] + [
+        dict(e, part=1) for e in events for _ in range(1 + e["again"])
     ]
-    chunk2 = [
-        {"ts": 3, "eid": 2, "op": "insert", "a": 7, "a_act": 1, "b": 9, "b_act": 1},
-    ]
-    state_t, _ = _run_fold([chunk1, chunk2])
-    ts_ms, eid, alive, a, b = state_t
-    # the NaT row folds to a pre-epoch offset and the real row wins
-    assert (ts_ms, eid, alive, a, b) == (3, 2, 1, 7, 9)
+    got = _fold(spark, rows)
+    for k in range(len(histories)):
+        want = _naive_fold([e for e in events if e["user_id"] == k])
+        assert got[(k, 0)] == got[(k, 1)] == want
 
 
 # ---------------------------------------------------------------------------

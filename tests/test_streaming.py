@@ -4,8 +4,8 @@ The reference's workhorse test (MySqlConnectorITCase.java:215-275) applies
 live INSERT/UPDATE/DELETE and asserts the materialized sink equals the
 expected final state. Here: fixture events -> Debezium-envelope JSON files
 (the exact JsonDebeziumDeserializationSchema wire shape) -> file stream ->
-foreachBatch MERGE -> assert the state store equals the batch
-changelog_normalize over the same log.
+max_by streaming aggregate -> update log -> assert the read-back equals
+the batch changelog_normalize over the same log.
 """
 
 from __future__ import annotations
@@ -39,58 +39,98 @@ def envelope_dir(spark, sf_dir, tmp_path_factory):
     return out
 
 
-@pytest.mark.parametrize("strategy", ["stateful", "rewrite"])
+@pytest.mark.parametrize(
+    "keys", [["user_id"], ["user_id", "shard"]], ids=["user_id", "user_id_shard"]
+)
 def test_stream_materialize_equals_batch_normalize(
-    spark, sf_dir, envelope_dir, tmp_path, strategy
+    spark, sf_dir, envelope_dir, tmp_path, keys
 ):
+    """The read-back equals the batch normalize over the same keys. The
+    shard splits each user's history, so a key column the aggregate
+    ignored would collapse two shards into one row."""
+    shard = (F.col("event_id") % 3).alias("shard")
     state_dir = str(tmp_path / "state")
     ckpt = str(tmp_path / "ckpt")
     stream = read_changelog_stream(spark, envelope_dir, max_files_per_trigger=1)
-    q = materialize_latest_state(
-        stream, state_dir, ckpt, available_now=True, strategy=strategy
+    materialize_latest_state(
+        stream.select("*", shard), state_dir, ckpt, key_cols=keys, available_now=True
     )
-    q.awaitTermination(300)
 
+    cols = [*keys, F.round("value", 2).alias("value_r"), "event_id"]
     got = (
-        read_latest_state(spark, state_dir)
-        .select("user_id", F.round("value", 2).alias("value_r"), "event_id")
+        read_latest_state(spark, state_dir, keys)
+        .select(*cols)
         .toPandas()
-        .sort_values("user_id")
+        .sort_values(keys)
         .reset_index(drop=True)
     )
     want = (
-        changelog_normalize(changelog_view(load_table(spark, sf_dir, "events")))
-        .select("user_id", F.round("value", 2).alias("value_r"), "event_id")
+        changelog_normalize(
+            changelog_view(load_table(spark, sf_dir, "events")).select("*", shard),
+            key_cols=keys,
+        )
+        .select(*cols)
         .toPandas()
-        .sort_values("user_id")
+        .sort_values(keys)
         .reset_index(drop=True)
     )
     assert len(got) == len(want) and len(got) > 0
-    assert (got["user_id"] == want["user_id"]).all()
+    assert want.duplicated("user_id").any() == (len(keys) > 1)
+    assert (got[keys] == want[keys]).all(axis=None)
     assert (got["event_id"] == want["event_id"]).all()
     assert (got["value_r"] - want["value_r"]).abs().max() < 1e-9
 
 
-@pytest.mark.parametrize("strategy", ["stateful", "rewrite"])
 def test_stream_materialize_is_incremental_and_resumable(
-    spark, sf_dir, envelope_dir, tmp_path, strategy
+    spark, sf_dir, envelope_dir, tmp_path
 ):
     """Restarting from the checkpoint must not change the final state
     (exactly-once restore — the DebeziumOffset/dedup contract)."""
     state_dir = str(tmp_path / "state")
     ckpt = str(tmp_path / "ckpt")
     stream = read_changelog_stream(spark, envelope_dir, max_files_per_trigger=2)
-    materialize_latest_state(
-        stream, state_dir, ckpt, available_now=True, strategy=strategy
-    ).awaitTermination(300)
+    materialize_latest_state(stream, state_dir, ckpt, available_now=True)
     n1 = read_latest_state(spark, state_dir).count()
     # resume with the same checkpoint: no new input -> state unchanged
     stream2 = read_changelog_stream(spark, envelope_dir)
-    materialize_latest_state(
-        stream2, state_dir, ckpt, available_now=True, strategy=strategy
-    ).awaitTermination(300)
+    materialize_latest_state(stream2, state_dir, ckpt, available_now=True)
     n2 = read_latest_state(spark, state_dir).count()
     assert n1 == n2
+
+
+def test_read_latest_state_breaks_offset_ties_by_schema_epoch(spark, tmp_path):
+    """A re-snapshot image shares its (ts, event_id) with the raw change
+    emitted under the old decode, and lands in the update log an epoch
+    later. The read-back must rank the log as the aggregate did — with
+    ``schema_epoch`` after (ts, event_id) — and return the new decode for
+    every key, as ``changelog_normalize`` over the whole log does."""
+    import datetime
+    import time
+
+    schema = (
+        "op string, user_id long, value double, props string, ts timestamp, "
+        "event_id long, schema_epoch int"
+    )
+    t = datetime.datetime(2024, 1, 1)
+    raw = [("update", k, 9.0, "{}", t, k, 0) for k in range(200)]
+    images = [("update", k, 1.5, "{}", t, k, 1) for k in range(200)]
+    src = str(tmp_path / "in")
+    spark.createDataFrame(raw, schema).coalesce(1).write.parquet(src + "/b1")
+    time.sleep(1.1)  # distinct mtimes: the file source orders oldest-first
+    spark.createDataFrame(images, schema).coalesce(1).write.parquet(src + "/b2")
+    stream = (
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src + "/*")
+    )
+    state_dir = str(tmp_path / "state")
+    q = materialize_latest_state(stream, state_dir, str(tmp_path / "ckpt"))
+    assert [p.numInputRows for p in q.recentProgress if p.numInputRows] == [200, 200]
+
+    got = {r["user_id"]: r["value"] for r in read_latest_state(spark, state_dir).collect()}
+    want = {
+        r["user_id"]: r["value"]
+        for r in changelog_normalize(spark.createDataFrame(raw + images, schema)).collect()
+    }
+    assert got == want == {k: 1.5 for k in range(200)}
 
 
 def test_windowed_agg_stream_matches_batch_window(spark, sf_dir, envelope_dir, tmp_path):
@@ -154,6 +194,43 @@ def test_compact_tombstones(spark, sf_dir, envelope_dir, tmp_path):
     live_after = sorted(r["user_id"] for r in read_latest_state(spark, state_dir).collect())
     assert live_before == live_after
     assert spark.read.parquet(state_dir).filter("op = 'delete'").count() == 0
+
+
+def test_compact_tombstones_keeps_a_file_appended_after_its_read(
+    spark, envelope_dir, tmp_path, monkeypatch
+):
+    """A live stream may append to the store while compaction runs: a
+    file that lands after the compaction read its input must survive it,
+    and every row the compaction read must still resolve the same."""
+    from flink_cdc_connectors_spark.streaming.changelog import compact_tombstones
+
+    state_dir, ckpt = str(tmp_path / "state"), str(tmp_path / "ckpt")
+    materialize_latest_state(read_changelog_stream(spark, envelope_dir), state_dir, ckpt)
+    live_before = read_latest_state(spark, state_dir).collect()
+    late = spark.read.parquet(state_dir).limit(1).collect()[0].asDict()
+    late.update(user_id=-1, op="insert", event_id=late["event_id"] + 10**9)
+    max_off = spark.read.parquet(state_dir).agg(F.max("event_id")).first()[0]
+
+    frame = type(spark.range(1))
+    count = frame.count
+    appended = []
+
+    def count_then_append(df):
+        # the first action after compaction's read: a stream's epoch lands
+        if not appended:
+            appended.append(1)
+            spark.createDataFrame([late], spark.read.parquet(state_dir).schema).write.mode(
+                "append"
+            ).parquet(state_dir)
+        return count(df)
+
+    monkeypatch.setattr(frame, "count", count_then_append)
+    assert compact_tombstones(spark, state_dir, safe_offset=max_off) > 0
+    monkeypatch.undo()
+    assert appended
+    live_after = read_latest_state(spark, state_dir)
+    assert live_after.filter("user_id = -1").count() == 1
+    assert sorted(live_after.filter("user_id <> -1").collect()) == sorted(live_before)
 
 
 def test_route_tables_splits_mixed_stream(spark, sf_dir):
@@ -251,8 +328,8 @@ def test_watermark_drops_late_events(spark, sf_dir, tmp_path):
 
 
 def test_stateful_streaming_normalize(spark, sf_dir, envelope_dir):
-    """applyInPandasWithState ChangelogNormalize: per-key state store,
-    update-mode emissions. The LAST emission per key must equal the batch
+    """The max_by ChangelogNormalize: per-key state store, update-mode
+    emissions. The LAST emission per key must equal the batch
     normalize (state converges to latest-by-offset), with delete
     tombstones for keys whose last event is a delete."""
     from flink_cdc_connectors_spark.streaming.stateful import (
